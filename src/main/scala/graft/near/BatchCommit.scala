@@ -22,7 +22,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pointer still says N) → stage table output → write MANIFEST (the
   * exact target file list) → move staged files into the live tables →
   * advance CURRENT to N+1 (the commit point) → delete MANIFEST /
-  * staging / `v(N)`. [[recover]] runs at batch start and rolls an
+  * staging / `v(N)`. The state writes and stagings of one batch run
+  * together ([[stageBatch]]), and every one of them has completed —
+  * succeeded, failed or been cancelled — before the MANIFEST is
+  * written or the batch fails: no write is still running into
+  * `_staging` or `v(N+1)` when [[recover]] sweeps them.
+  *
+  * [[recover]] runs at batch start and rolls an
   * interrupted batch back (deletes the manifest's target files — moves
   * are the only live-table mutation, so deleting them restores the
   * pre-batch warehouse exactly) or forward (pointer already advanced:
@@ -162,18 +168,49 @@ object BatchCommit {
     v
   }
 
-  /** Write one state table for the in-flight version. An empty frame
-    * writes nothing — absence IS the empty state (empty parquet writes
-    * leave schema-less dirs that poison later reads).
+  /** Parquet data files under `dir` (recursively), with their footer
+    * row counts. Spark writes a zero-row file (the schema carrier) for
+    * an empty unpartitioned output and for an empty first task, so a
+    * write's emptiness is read here instead of probed before it.
+    */
+  private def dataFiles(f: FileSystem, dir: Path): Seq[(Path, Long)] = {
+    val out = scala.collection.mutable.ArrayBuffer[(Path, Long)]()
+    if (f.exists(dir)) {
+      val it = f.listFiles(dir, true)
+      while (it.hasNext) {
+        val p = it.next().getPath
+        if (!p.getName.startsWith("_") && !p.getName.startsWith("."))
+          out += ((p, rowCount(f, p)))
+      }
+    }
+    out.toSeq
+  }
+
+  private def rowCount(f: FileSystem, p: Path): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, f.getConf))
+    try r.getRecordCount finally r.close()
+  }
+
+  /** Write one state table for the in-flight version. Zero-row files
+    * are deleted after the write, and so is the whole output when no
+    * row was written — absence IS the empty state, so a reader never
+    * meets a schema-less or all-empty state dir.
     */
   def writeState(spark: SparkSession, warehouseDir: String, version: Long,
-      name: String, df: DataFrame): Unit =
-    if (!df.isEmpty)
-      df.write.mode("overwrite")
-        .parquet(statePath(warehouseDir, version, name))
+      name: String, df: DataFrame): Unit = {
+    val out = new Path(statePath(warehouseDir, version, name))
+    df.write.mode("overwrite").parquet(out.toString)
+    val f = fs(spark, warehouseDir)
+    val (empty, rows) = dataFiles(f, out).partition(_._2 == 0L)
+    if (rows.isEmpty) f.delete(out, true)
+    else empty.foreach { case (p, _) => f.delete(p, false) }
+  }
 
   /** Stage a table's batch output and return (src, dst) moves into the
-    * live table dir. Staged file names carry fresh write-UUIDs, so dst
+    * live table dir. Zero-row files are left out of the moves (they
+    * stay in staging, which cleanup deletes), so an empty output adds
+    * no live file. Staged file names carry fresh write-UUIDs, so dst
     * paths never collide with existing live files.
     */
   def stageTable(spark: SparkSession, warehouseDir: String, table: String,
@@ -184,18 +221,64 @@ object BatchCommit {
       case None    => df.write
     }
     w.mode("overwrite").parquet(staging)
-    val f = fs(spark, warehouseDir)
     val base = new Path(staging).toUri.getPath
-    val moves = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    val it = f.listFiles(new Path(staging), true)
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (!p.getName.startsWith("_") && !p.getName.startsWith(".")) {
+    dataFiles(fs(spark, warehouseDir), new Path(staging)).collect {
+      case (p, rows) if rows > 0L =>
         val rel = p.toUri.getPath.stripPrefix(base).stripPrefix("/")
-        moves += ((p.toUri.getPath, s"$warehouseDir/$table/$rel"))
-      }
+        (p.toUri.getPath, s"$warehouseDir/$table/$rel")
     }
-    moves.toSeq
+  }
+
+  /** Write a batch's next-version states and stage its tables, all at
+    * once on a pool made for this call and sized by the cluster's
+    * default parallelism: one small batch leaves most cores idle
+    * through any one write. Returns each table's moves, in the order
+    * given (empty for a table that produced no rows).
+    *
+    * The pool's threads are started here, by the calling thread, so
+    * they inherit its Spark local properties — the streaming query's
+    * job group and batch id; a pool kept across batches would carry a
+    * previous batch's. When a write fails the writes not yet started
+    * are cancelled and the running ones awaited before the first
+    * failure is rethrown, so no write outlives this call.
+    */
+  def stageBatch(spark: SparkSession, warehouseDir: String, version: Long,
+      states: Seq[(String, DataFrame)],
+      tables: Seq[(String, DataFrame, Option[String])])
+      : Seq[(String, Seq[(String, String)])] = {
+    import java.util.concurrent._
+    val writes: Seq[() => Seq[(String, String)]] =
+      states.map { case (name, df) => () =>
+        writeState(spark, warehouseDir, version, name, df); Seq.empty
+      } ++ tables.map { case (name, df, part) => () =>
+        stageTable(spark, warehouseDir, name, df, part)
+      }
+    val n = math.max(1, math.min(writes.size,
+      spark.sparkContext.defaultParallelism))
+    val pool = new ThreadPoolExecutor(n, n, 0L, TimeUnit.MILLISECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "batch-commit-write")
+        t.setDaemon(true)
+        t
+      })
+    pool.prestartAllCoreThreads()
+    val done = new ExecutorCompletionService[Seq[(String, String)]](pool)
+    val futures = writes.map(w => done.submit(() => w()))
+    try {
+      futures.foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+      tables.map(_._1).zip(futures.drop(states.size).map(_.get()))
+    } finally {
+      futures.foreach(_.cancel(false))
+      pool.shutdown()
+      var interrupted = false
+      while (!pool.isTerminated)
+        try pool.awaitTermination(1, TimeUnit.MINUTES)
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
   }
 
   def writeManifest(spark: SparkSession, warehouseDir: String, version: Long,

@@ -236,14 +236,13 @@ object Runbook {
     val committed = BatchCommit.recover(spark, warehouseDir)
     val next = committed + 1
     val moves = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    if (!ac.isEmpty)
-      moves ++= BatchCommit.stageTable(spark, warehouseDir, "account_changes",
-        ac.withColumn("block_date",
-          Stream.dayCol("changed_in_block_timestamp")),
-        Some("block_date"))
-    if (!ak.isEmpty)
-      moves ++= BatchCommit.stageTable(spark, warehouseDir, "access_keys",
-        ak, None)
+    // An empty recompute stages no file (see BatchCommit.stageTable).
+    moves ++= BatchCommit.stageTable(spark, warehouseDir, "account_changes",
+      ac.withColumn("block_date",
+        Stream.dayCol("changed_in_block_timestamp")),
+      Some("block_date"))
+    moves ++= BatchCommit.stageTable(spark, warehouseDir, "access_keys",
+      ak, None)
     // Mark every covered block repaired — including blocks that
     // contributed no rows (their recompute is settled; a later repair
     // of an overlapping range must not re-fold them).

@@ -194,12 +194,14 @@ object Stream {
     // every state table at the committed version; this batch's state
     // goes to version+1, invisible until the commit point.
     val committed = BatchCommit.recover(spark, warehouseDir)
-    if (norm0.isEmpty) return
     val nextVersion = committed + 1
     def readStateV(name: String): Option[DataFrame] =
       readIfExists(spark, BatchCommit.statePath(warehouseDir, committed, name))
+    // State outputs are written together with the table stagings (see
+    // the commit below), so they are only collected here.
+    val stateWrites = scala.collection.mutable.ArrayBuffer[(String, DataFrame)]()
     def writeStateV(name: String, df: DataFrame): Unit =
-      BatchCommit.writeState(spark, warehouseDir, nextVersion, name, df)
+      stateWrites += ((name, df))
     // Replay idempotency (S2's from-interruption −500 rewind,
     // configs.rs:118-119): the reference replays whole blocks and
     // relies on ON CONFLICT DO NOTHING; the parquet warehouse has no
@@ -215,14 +217,19 @@ object Stream {
         norm0("blockHash") === col("seen_bh"), "left_anti")
       case None => norm0
     }
-    if (blocksSeen.isDefined && normIn.isEmpty) return
     val norm = normIn.persist()
     try {
-      // S9: block counter + latest-height gauge (metrics.rs:6-14)
+      // One job over the persisted batch answers every batch-level
+      // question: is it empty (nothing new, or every block already
+      // seen), the S9 block counter + latest-height gauge
+      // (metrics.rs:6-14), the recovery floor's batch day, and whether
+      // it holds a same-height fork (more blocks than heights).
       val stats = norm.agg(count(lit(1)),
         max(col("blockHeight").cast("long")),
         min(expr("CAST(blockTimestamp AS DECIMAL(38,0)) div 86400000000000")
-          .cast("long"))).collect()(0)
+          .cast("long")),
+        countDistinct(col("blockHeight"))).collect()(0)
+      if (stats.getLong(0) == 0L) return
       val maxHeight = if (stats.isNullAt(1)) 0L else stats.getLong(1)
       Metrics.recordBatch(stats.getLong(0), maxHeight)
       // Recovery watermark for the mirrorless lineage fallback: parents
@@ -291,8 +298,7 @@ object Stream {
       val transactions = Transforms.transactions(txBase)
       // Fork-dedup windows are paid only when the batch actually holds
       // a same-height fork (see Ingest.allTables for the rationale).
-      val hasForks = !norm.groupBy(col("blockHeight")).count()
-        .filter(col("count") > 1).isEmpty
+      val hasForks = stats.getLong(0) > stats.getLong(3)
       def pkGuard(df: DataFrame, pk: Seq[org.apache.spark.sql.Column],
           order: Seq[org.apache.spark.sql.Column]): DataFrame =
         if (hasForks) Transforms.dedupPk(df, pk, order) else df
@@ -523,7 +529,9 @@ object Stream {
 
       val tables = Map(
         "blocks" -> Transforms.blocks(norm),
-        "chunks" -> Transforms.chunks(norm),
+        // a same-height fork can re-deliver its sibling's chunk
+        "chunks" -> pkGuard(Transforms.chunks(norm),
+          Seq(col("chunk_hash")), Seq(col("included_in_block_hash"))),
         "transactions" -> transactions,
         "transaction_actions" -> Transforms.transactionActions(txBase),
         // receipts: new ∪ formerly-pending, lineage-gated
@@ -592,30 +600,30 @@ object Stream {
           Seq(col("h")))
           .filter(col("h") >= lit(maxHeight - collisionWindowBlocks)))
 
-      // Stage every non-empty table, then commit atomically: manifest
-      // (the exact target file list) → moves → pointer advance. Empty
-      // outputs are skipped — zero-row parquet writes leave schema-less
-      // dirs that poison later reads; table absence is handled by
-      // Warehouse.tableOpt / readIfExists.
-      val stagedMoves = scala.collection.mutable.ArrayBuffer[(String, String)]()
-      val written = scala.collection.mutable.ArrayBuffer[(String, DataFrame)]()
-      tables.foreach { case (name, df) =>
-        if (!df.isEmpty) {
-          val (out, part) = TimePartitioned.get(name) match {
-            case Some(ts) =>
-              (df.withColumn("block_date", dayCol(ts)), Some("block_date"))
-            case None => (df, None)
+      // Write every state and stage every table, all together and
+      // without probing for emptiness: a write that produced no rows
+      // leaves no state dir and adds no move (BatchCommit.stageBatch),
+      // so an empty table still gets no live file. Then commit
+      // atomically: manifest (the exact target file list) → moves →
+      // pointer advance.
+      val staged = BatchCommit.stageBatch(spark, warehouseDir, nextVersion,
+        stateWrites.toSeq,
+        tables.toSeq.map { case (name, df) =>
+          TimePartitioned.get(name) match {
+            case Some(ts) => (name,
+              df.withColumn("block_date", dayCol(ts)), Some("block_date"))
+            case None => (name, df, None)
           }
-          stagedMoves ++= BatchCommit.stageTable(spark, warehouseDir, name,
-            out, part)
-          written += ((name, df))
-        }
+        })
+      val stagedMoves = staged.flatMap(_._2)
+      val written = staged.collect {
+        case (name, moves) if moves.nonEmpty => (name, tables(name))
       }
       commitHook("staged")
       BatchCommit.writeManifest(spark, warehouseDir, nextVersion,
-        stagedMoves.map(_._2).toSeq)
+        stagedMoves.map(_._2))
       commitHook("manifest")
-      BatchCommit.applyMoves(spark, warehouseDir, stagedMoves.toSeq)
+      BatchCommit.applyMoves(spark, warehouseDir, stagedMoves)
       commitHook("moved")
       // Dual-write to the JDBC mirror when configured (S5/S7):
       // ON CONFLICT DO NOTHING for the append-only tables, guarded

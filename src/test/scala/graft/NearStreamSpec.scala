@@ -90,6 +90,60 @@ class NearStreamSpec extends AnyFunSuite {
     q.awaitTermination()
   }
 
+  private def norm(js: Seq[String]) =
+    graft.near.Ingest.blocksFromJson(spark, js).toDF()
+
+  /** Sorted rows of a table, columns in `cols` order, as strings. */
+  private def rows(df: org.apache.spark.sql.DataFrame,
+      cols: Seq[String]): Seq[String] =
+    df.select(cols.map(col): _*).collect()
+      .map(_.toSeq.map {
+        case b: Array[Byte] => b.map("%02x".format(_)).mkString
+        case v => String.valueOf(v)
+      }.mkString("|")).sorted.toSeq
+
+  /** The streamed warehouse holds exactly the batch path's rows for
+    * `blocks`, table by table; the registries are compared as their
+    * folded current state.
+    */
+  private def assertMatchesBatch(wh: String, blocks: Seq[String]): Unit = {
+    val batch = graft.near.Ingest.allTables(norm(blocks))
+    graft.queries.NearQueries.StreamedGateTables.toSeq.sorted.foreach { t =>
+      val fold: org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.DataFrame = t match {
+        case "accounts" => Warehouse.accountsCurrent
+        case "access_keys" => Warehouse.accessKeysCurrent
+        case _ => identity
+      }
+      val want = fold(batch(t))
+      val got = Warehouse.tableOpt(spark, wh, t).map(fold)
+        .map(rows(_, want.columns.toSeq)).getOrElse(Seq.empty)
+      assert(got == rows(want, want.columns.toSeq),
+        s"$t: streamed rows differ from the batch path")
+    }
+  }
+
+  /** Committed parquet files with a zero row count in their footer,
+    * under the 17 table dirs and the committed state version.
+    */
+  private def zeroRowFiles(wh: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val v = graft.near.BatchCommit.currentVersion(spark, wh)
+    val dirs = graft.queries.NearQueries.StreamedGateTables.toSeq
+      .map(t => Paths.get(wh, t)) :+ Paths.get(wh, "_state", s"v$v")
+    val conf = spark.sparkContext.hadoopConfiguration
+    dirs.filter(Files.exists(_)).flatMap { d =>
+      val w = Files.walk(d)
+      try w.iterator().asScala.toList finally w.close()
+    }.filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
+      .filter { p =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(p.toUri), conf))
+        try r.getRecordCount == 0L finally r.close()
+      }.map(_.toString)
+  }
+
   test("commit protocol refuses non-atomic-rename object stores") {
     // The manifest protocol is sound only under atomic rename; on
     // copy+delete stores a mid-rename crash silently voids exactly-once,
@@ -452,6 +506,10 @@ class NearStreamSpec extends AnyFunSuite {
       assert(Warehouse.table(spark, wh, "blocks").count() == g.nBlockRows)
       assert(Warehouse.table(spark, wh, "execution_outcome_receipts")
         .count() == g.nEdges)
+      // Outputs are written without emptiness probes; what came out
+      // empty must still leave no committed file behind.
+      val empty = zeroRowFiles(wh)
+      assert(empty.isEmpty, s"seed=$seed zero-row committed files: $empty")
     }
   }
 
@@ -486,6 +544,63 @@ class NearStreamSpec extends AnyFunSuite {
           s"crashAt=$crashAt: $t has replay duplicates")
       }
     }
+  }
+
+  test("a failed write fails the batch whole; the next good batch commits") {
+    // A total_supply above DECIMAL(38,0) fails only the `blocks` write
+    // (its checked cast raises); the other outputs of the batch are
+    // written beside it. The batch must throw only after every write
+    // has stopped, commit nothing, and leave the warehouse to the next
+    // batch.
+    import scala.jdk.CollectionConverters._
+    val chain = Fixtures.chain
+    val wh = Files.createTempDirectory("graft_write_fail").toString + "/wh"
+    Stream.processBatch(spark, norm(chain.take(1)), wh)
+    def liveFiles: Set[String] = {
+      val w = Files.walk(Paths.get(wh))
+      try w.iterator().asScala.map(p => Paths.get(wh).relativize(p).toString)
+        .filter(r => !r.startsWith("_") && r.endsWith(".parquet")).toSet
+      finally w.close()
+    }
+    val version = graft.near.BatchCommit.currentVersion(spark, wh)
+    val before = liveFiles
+    val huge = "1" + "0" * 40
+    val bad = chain(1).replace(
+      "\"total_supply\":\"1178709068419829947981959148837955\"",
+      s"\"total_supply\":\"$huge\"")
+    assert(bad != chain(1))
+    val e = intercept[Exception] {
+      Stream.processBatch(spark, norm(Seq(bad, chain(2), chain(3))), wh)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+    assert(messages.contains(huge), messages.take(2000))
+    // No write outlives the failed batch.
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == "batch-commit-write").foreach { t =>
+        t.join(10000)
+        assert(!t.isAlive, "a batch write is still running")
+      }
+    assert(graft.near.BatchCommit.currentVersion(spark, wh) == version)
+    assert(liveFiles == before, "the failed batch added live table files")
+    Stream.processBatch(spark, norm(chain.drop(1)), wh)
+    assert(graft.near.BatchCommit.currentVersion(spark, wh) == version + 1)
+    assertMatchesBatch(wh, chain)
+  }
+
+  test("a same-height fork re-delivering a chunk writes it once, as the batch path does") {
+    // chunks' PK is chunk_hash: the third height-102 block carries the
+    // chunk its sibling B102b already delivered in the same batch.
+    val chain = Fixtures.chain
+    val fork = Fixtures.block(102, "B102c", "B101", "1700000002000000000",
+      Seq(Fixtures.shard(0, Some(Fixtures.chunk("C102b", 0, Seq.empty,
+        Seq.empty)), Seq.empty, Seq.empty)))
+    val wh = Files.createTempDirectory("graft_fork_chunk").toString + "/wh"
+    Stream.processBatch(spark, norm(chain.take(2)), wh)
+    Stream.processBatch(spark, norm(chain.drop(2) :+ fork), wh)
+    val chunks = Warehouse.table(spark, wh, "chunks")
+    assert(chunks.count() == chunks.select("chunk_hash").distinct().count())
+    assertMatchesBatch(wh, chain :+ fork)
   }
 
   test("random chains with random mid-commit crashes converge exactly-once") {

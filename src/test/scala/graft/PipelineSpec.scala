@@ -2164,7 +2164,7 @@ class PipelineSpec extends AnyFunSuite {
     // The ledger's parquet scan over the stage prunes to the two
     // projected columns (the staged table has four).
     val scan = staged.queryExecution.executedPlan.toString.linesIterator
-      .find(_.contains("/stage/recipe_"))
+      .find(_.contains(s"${PipelineQueries.stageRoot}/recipe_"))
     assert(scan.exists(_.contains(
       "ReadSchema: struct<doc_id:bigint,disposition:string>")),
       s"stage scan not pruned: $scan")
