@@ -3,10 +3,10 @@ package graft.near
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Atomic per-batch commit for the parquet warehouse: makes a
-  * [[Stream.processBatch]] — its table appends AND its five cross-batch
-  * state tables — all-or-nothing across a mid-batch crash, closing the
-  * at-least-once window the reference side-steps with Postgres
+/** Atomic per-batch commit for the parquet warehouse: makes a batch —
+  * its table appends AND its cross-batch state tables — all-or-nothing
+  * across a mid-batch crash, closing the at-least-once window the
+  * reference side-steps with Postgres
   * `ON CONFLICT` (`database/src/adapters/receipts.rs:484-498`; parquet
   * appends have no PK to conflict on).
   *
@@ -18,15 +18,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   _staging/<table>/     the batch's table output, pre-move
   * }}}
   *
-  * Protocol per batch: write next states to `v(N+1)` (invisible — the
-  * pointer still says N) → stage table output → write MANIFEST (the
-  * exact target file list) → move staged files into the live tables →
-  * advance CURRENT to N+1 (the commit point) → delete MANIFEST /
-  * staging / `v(N)`. The state writes and stagings of one batch run
-  * together ([[stageBatch]]), and every one of them has completed —
-  * succeeded, failed or been cancelled — before the MANIFEST is
-  * written or the batch fails: no write is still running into
-  * `_staging` or `v(N+1)` when [[recover]] sweeps them.
+  * Protocol per batch ([[commit]], the one entry every writer uses —
+  * [[Stream.processBatch]] and the runbook's repair backfill): write
+  * next states to `v(N+1)` (invisible — the pointer still says N) and
+  * carry every other committed state there → stage table output →
+  * write MANIFEST (the exact target file list) → move staged files
+  * into the live tables → advance CURRENT to N+1 (the commit point) →
+  * delete MANIFEST / staging / `v(N)`. The state writes and stagings of
+  * one batch run together ([[stageBatch]]), and every one of them has
+  * completed — succeeded, failed or been cancelled — before the
+  * MANIFEST is written or the batch fails: no write is still running
+  * into `_staging` or `v(N+1)` when [[recover]] sweeps them.
+  *
+  * The commit owns the state carry: a state table committed at `v(N)`
+  * that the batch does not write is copied to `v(N+1)` unchanged, so
+  * no writer lists the states it leaves alone. The carry is decided by
+  * the names the batch passed, not by which `v(N+1)` dirs exist: a
+  * passed state that came out empty leaves no dir (absence is the
+  * empty state), and must not bring the old version's rows back.
   *
   * [[recover]] runs at batch start and rolls an
   * interrupted batch back (deletes the manifest's target files — moves
@@ -192,12 +201,82 @@ object BatchCommit {
     try r.getRecordCount finally r.close()
   }
 
+  /** The state-table dirs committed at `version`. */
+  private def stateDirs(f: FileSystem, warehouseDir: String,
+      version: Long): Seq[Path] = {
+    val dir = new Path(s"$warehouseDir/$StateDir/v$version")
+    if (!f.exists(dir)) Seq.empty
+    else f.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath)
+  }
+
+  /** Every state table committed at `version`, by name (absent =
+    * empty).
+    */
+  def readState(spark: SparkSession, warehouseDir: String,
+      version: Long): Map[String, DataFrame] =
+    stateDirs(fs(spark, warehouseDir), warehouseDir, version).flatMap { p =>
+      // An all-empty write leaves a schema-less dir; treat as absent.
+      scala.util.Try(spark.read.parquet(p.toString)).toOption
+        .map(p.getName -> _)
+    }.toMap
+
+  /** Commit one batch, all or nothing: `states` become the next
+    * version's state tables, every other state committed at
+    * `committed` (the version [[recover]] returned) is carried to it
+    * file for file, and `tables` are appended to the live tables —
+    * those in [[Stream.TimePartitioned]] partitioned by the UTC day of
+    * their timestamp. `onMoved` runs after the moves and before the
+    * commit point, with each table that added rows (the JDBC mirror's
+    * dual write, idempotent under replay). `hook` is the crash-injection
+    * seam, called with "staged", "manifest", "moved" and "committed".
+    */
+  def commit(spark: SparkSession, warehouseDir: String, committed: Long,
+      states: Seq[(String, DataFrame)], tables: Seq[(String, DataFrame)],
+      hook: String => Unit = _ => (),
+      onMoved: Seq[(String, DataFrame)] => Unit = _ => ()): Unit = {
+    val f = fs(spark, warehouseDir)
+    val next = committed + 1
+    stateDirs(f, warehouseDir, committed)
+      .filterNot(p => states.exists(_._1 == p.getName)).foreach { p =>
+        val dst = new Path(statePath(warehouseDir, next, p.getName))
+        if (!org.apache.hadoop.fs.FileUtil.copy(f, p, f, dst, false, f.getConf))
+          throw new java.io.IOException(s"batch commit: carry $p -> $dst failed")
+      }
+    val staged = stageBatch(spark, warehouseDir, next, states,
+      tables.map { case (name, df) =>
+        Stream.TimePartitioned.get(name) match {
+          case Some(ts) => (name,
+            df.withColumn("block_date", Stream.dayCol(ts)), Some("block_date"))
+          case None => (name, df, None)
+        }
+      })
+    val moves = staged.flatMap(_._2)
+    hook("staged")
+    writeManifest(spark, warehouseDir, next, moves.map(_._2))
+    hook("manifest")
+    moves.foreach { case (src, dst) =>
+      val d = new Path(dst)
+      f.mkdirs(d.getParent)
+      renameOrThrow(f, new Path(src), d)
+    }
+    hook("moved")
+    onMoved(tables.zip(staged).collect { case (t, (_, m)) if m.nonEmpty => t })
+    // THE commit point: after this, recovery rolls forward.
+    writeSmallAtomic(f, nextPath(warehouseDir), next.toString)
+    f.delete(currentPath(warehouseDir), false)
+    renameOrThrow(f, nextPath(warehouseDir), currentPath(warehouseDir))
+    hook("committed")
+    f.delete(manifestPath(warehouseDir), false)
+    f.delete(new Path(s"$warehouseDir/$StagingDir"), true)
+    f.delete(new Path(s"$warehouseDir/$StateDir/v$committed"), true)
+  }
+
   /** Write one state table for the in-flight version. Zero-row files
     * are deleted after the write, and so is the whole output when no
     * row was written — absence IS the empty state, so a reader never
     * meets a schema-less or all-empty state dir.
     */
-  def writeState(spark: SparkSession, warehouseDir: String, version: Long,
+  private def writeState(spark: SparkSession, warehouseDir: String, version: Long,
       name: String, df: DataFrame): Unit = {
     val out = new Path(statePath(warehouseDir, version, name))
     df.write.mode("overwrite").parquet(out.toString)
@@ -213,7 +292,7 @@ object BatchCommit {
     * no live file. Staged file names carry fresh write-UUIDs, so dst
     * paths never collide with existing live files.
     */
-  def stageTable(spark: SparkSession, warehouseDir: String, table: String,
+  private def stageTable(spark: SparkSession, warehouseDir: String, table: String,
       df: DataFrame, partitionCol: Option[String]): Seq[(String, String)] = {
     val staging = s"$warehouseDir/$StagingDir/$table"
     val w = partitionCol match {
@@ -242,7 +321,7 @@ object BatchCommit {
     * are cancelled and the running ones awaited before the first
     * failure is rethrown, so no write outlives this call.
     */
-  def stageBatch(spark: SparkSession, warehouseDir: String, version: Long,
+  private def stageBatch(spark: SparkSession, warehouseDir: String, version: Long,
       states: Seq[(String, DataFrame)],
       tables: Seq[(String, DataFrame, Option[String])])
       : Seq[(String, Seq[(String, String)])] = {
@@ -281,8 +360,8 @@ object BatchCommit {
     }
   }
 
-  def writeManifest(spark: SparkSession, warehouseDir: String, version: Long,
-      files: Seq[String]): Unit = {
+  private[graft] def writeManifest(spark: SparkSession, warehouseDir: String,
+      version: Long, files: Seq[String]): Unit = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = m.createObjectNode()
     root.put("version", version)
@@ -290,32 +369,5 @@ object BatchCommit {
     files.foreach(arr.add)
     writeSmallAtomic(fs(spark, warehouseDir), manifestPath(warehouseDir),
       m.writeValueAsString(root))
-  }
-
-  def applyMoves(spark: SparkSession, warehouseDir: String,
-      moves: Seq[(String, String)]): Unit = {
-    val f = fs(spark, warehouseDir)
-    moves.foreach { case (src, dst) =>
-      val d = new Path(dst)
-      f.mkdirs(d.getParent)
-      renameOrThrow(f, new Path(src), d)
-    }
-  }
-
-  /** THE commit point: after this, recovery rolls forward. */
-  def advance(spark: SparkSession, warehouseDir: String,
-      version: Long): Unit = {
-    val f = fs(spark, warehouseDir)
-    writeSmallAtomic(f, nextPath(warehouseDir), version.toString)
-    f.delete(currentPath(warehouseDir), false)
-    renameOrThrow(f, nextPath(warehouseDir), currentPath(warehouseDir))
-  }
-
-  def cleanup(spark: SparkSession, warehouseDir: String,
-      committed: Long): Unit = {
-    val f = fs(spark, warehouseDir)
-    f.delete(manifestPath(warehouseDir), false)
-    f.delete(new Path(s"$warehouseDir/$StagingDir"), true)
-    f.delete(new Path(s"$warehouseDir/$StateDir/v${committed - 1}"), true)
   }
 }

@@ -14,13 +14,16 @@ object Ingest {
 
   implicit val normBlockEncoder: Encoder[NormBlock] = Encoders.product[NormBlock]
 
+  /** Parse whole-file block documents, one per row of `docs`' `value`
+    * column — the one parse behind the batch read, each streaming
+    * microbatch and the runbook's re-index.
+    */
+  def parse(docs: DataFrame): Dataset[NormBlock] =
+    docs.select("value").as[String](Encoders.STRING).map(BlockParser.parse _)
+
   /** Batch: parse every *.json block file under `path`. */
-  def blocks(spark: SparkSession, path: String): Dataset[NormBlock] = {
-    import spark.implicits._
-    spark.read.option("wholetext", "true").text(path)
-      .as[String]
-      .map(BlockParser.parse _)
-  }
+  def blocks(spark: SparkSession, path: String): Dataset[NormBlock] =
+    parse(spark.read.option("wholetext", "true").text(path))
 
   /** In-memory (fixtures / tests): parse the given JSON documents. */
   def blocksFromJson(spark: SparkSession, jsons: Seq[String]): Dataset[NormBlock] = {
@@ -29,83 +32,13 @@ object Ingest {
   }
 
   /** All 17 output tables from a normalized block set, with lineage
-    * resolved (batch path; the streaming wrapper reuses this per
-    * microbatch).
-    *
-    * CONTRACT NOTE — eager, not lazy: constructing the map runs the
-    * explode/flatten jobs for the four shared bases up front
-    * (localCheckpoint(true)), so a caller pays that cost even if it
-    * reads one cheap table or none. This trade bought the measured
-    * ingest win (~44 → ~100 blocks/s, r10→r11) because every real
-    * caller (bench, Verify, the streaming wrapper) consumes most of
-    * the 17 tables; don't construct the map speculatively. Also:
-    * localCheckpoint blocks do not survive executor loss — fine for a
-    * per-microbatch / bench lifetime, not for a long-lived handle.
+    * resolved: the stream's DAG ([[Stream.dag]]) with no carried state
+    * and no warehouse fallback. Building the map runs the fork probe
+    * and the lineage fixpoint; the shared bases are materialised by the
+    * first job that reads them (see [[Stream.dag]]), so a handle is good
+    * for one batch's lifetime, not across executor loss.
     */
-  def allTables(norm: DataFrame): Map[String, DataFrame] = {
-    import org.apache.spark.sql.functions.col
-    // The shared bases below feed 2–5 output tables EACH; without a
-    // materialization every per-table action re-runs the explode/
-    // flatten chain from `norm`. localCheckpoint (not persist): its
-    // blocks are released by the ContextCleaner when the frame is
-    // GC'd, so repeated allTables calls (fixture reuse, bench sweeps)
-    // leave no CacheManager residue behind.
-    def shared(df: DataFrame): DataFrame = df.localCheckpoint(true)
-    val txBase = shared(Transforms.transactionsBase(norm))
-    val transactions = Transforms.transactions(txBase)
-    // Same-height fork branches can deliver the same receipt/outcome in
-    // both blocks; dedup once at the base (satellites inherit) — the
-    // parquet-side analogue of the reference's ON-CONFLICT PKs. The
-    // window shuffles are paid only when the batch actually contains a
-    // same-height fork (receipt ids cannot collide otherwise; the JDBC
-    // mirror's PKs remain the unconditional guarantee).
-    val hasForks = !norm.groupBy(col("blockHeight")).count()
-      .filter(col("count") > 1).isEmpty
-    def pkGuard(df: DataFrame, pk: Seq[org.apache.spark.sql.Column],
-        order: Seq[org.apache.spark.sql.Column]): DataFrame =
-      if (hasForks) Transforms.dedupPk(df, pk, order) else df
-    val rBase = shared(pkGuard(Transforms.receiptsBase(norm),
-      Seq(col("r.receiptId")),
-      Seq(col("blockTimestamp"), col("blockHash"))))
-    val oBase = shared(pkGuard(Transforms.outcomesBase(norm),
-      Seq(col("o.receiptId")),
-      Seq(col("blockTimestamp"), col("blockHash"))))
-    val outcomeReceipts = Transforms.executionOutcomeReceipts(oBase)
-    // Lineage resolves over ALL chunk receipts' edges…
-    val outputDataAll = Transforms.actionReceiptOutputData(rBase)
-    val dataReceiptsAll = Transforms.dataReceipts(rBase)
-    val lineage = Lineage.resolve(transactions, outcomeReceipts,
-      outputDataAll, dataReceiptsAll)
-    // …but satellite tables exist only for receipts that resolved —
-    // the reference skips satellites for skipped receipts
-    // (receipts.rs:137-147 filter on skipping_receipt_ids).
-    val resolvedBase = shared(rBase.join(lineage,
-      rBase("r.receiptId") === lineage("lineage_receipt_id"), "left_semi"))
-    def eventPk(df: DataFrame) = pkGuard(df,
-      Seq(col("emitted_for_receipt_id"),
-        col("emitted_index_of_event_entry_in_shard")),
-      Seq(col("emitted_at_block_timestamp")))
-    Map(
-      "blocks" -> Transforms.blocks(norm),
-      "chunks" -> pkGuard(Transforms.chunks(norm),
-        Seq(col("chunk_hash")), Seq(col("included_in_block_hash"))),
-      "transactions" -> transactions,
-      "transaction_actions" -> Transforms.transactionActions(txBase),
-      "receipts" -> Transforms.receipts(rBase, lineage),
-      "action_receipts" -> Transforms.actionReceipts(resolvedBase),
-      "action_receipt_actions" -> Transforms.actionReceiptActions(resolvedBase),
-      "action_receipt_input_data" ->
-        Transforms.actionReceiptInputData(resolvedBase),
-      "action_receipt_output_data" ->
-        Transforms.actionReceiptOutputData(resolvedBase),
-      "data_receipts" -> Transforms.dataReceipts(resolvedBase),
-      "execution_outcomes" -> Transforms.executionOutcomes(oBase),
-      "execution_outcome_receipts" -> outcomeReceipts,
-      "accounts" -> Transforms.accountsRegistry(Transforms.accountEvents(norm)),
-      "access_keys" -> Transforms.accessKeysRegistry(Transforms.accessKeyEvents(norm)),
-      "account_changes" -> Transforms.accountChanges(norm),
-      "assets__fungible_token_events" -> eventPk(Events.ftEvents(norm)),
-      "assets__non_fungible_token_events" -> eventPk(Events.nftEvents(norm)),
-    )
-  }
+  def allTables(norm: DataFrame): Map[String, DataFrame] =
+    Stream.dag(norm, norm.agg(Stream.forkTest).head().getBoolean(0),
+      Map.empty).tables
 }

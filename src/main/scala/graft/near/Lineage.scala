@@ -145,8 +145,11 @@ object Lineage {
     resolved
   }
 
-  /** Batch entry point: (lineage_receipt_id,
-    * originated_from_transaction_hash) for every resolvable receipt.
+  /** Whole-graph lineage over one set of tables, with no carried seeds:
+    * (lineage_receipt_id, originated_from_transaction_hash) for every
+    * resolvable receipt. The indexer's DAG ([[Stream.dag]]) calls
+    * [[resolveGraph]] itself, because it folds carried seeds and edges
+    * in; this stays as the standalone entry over a table set.
     */
   def resolve(transactions: DataFrame, outcomeReceipts: DataFrame,
       outputData: DataFrame, dataReceipts: DataFrame,

@@ -140,7 +140,7 @@ object Runbook {
   def reindexRange(spark: SparkSession, inputDir: String,
       warehouseDir: String, from: Long, to: Long,
       nonStrict: Boolean = false): Unit = {
-    val ranged = parseBlocks(spark, inputDir)
+    val ranged = Ingest.blocks(spark, inputDir).toDF()
       .filter(col("blockHeight").cast("long").between(from, to))
     val norm = Warehouse.tableOpt(spark, warehouseDir, "blocks") match {
       case Some(b) =>
@@ -170,10 +170,10 @@ object Runbook {
     * already exists (belt and braces — the recompute over a fixed
     * block set is deterministic, so equal identity ⟹ equal row).
     * Writes go
-    * through the staged-manifest commit with the live state tables
-    * carried forward to the new version — a crash mid-backfill rolls
-    * forward/back exactly like an ingest batch, and the stream's
-    * replay-dedup window survives the version bump.
+    * through the same [[BatchCommit.commit]] as an ingest batch, which
+    * carries every state table forward to the new version — a crash
+    * mid-backfill rolls forward/back exactly like an ingest batch, and
+    * the stream's carried state survives the version bump.
     */
   private[graft] def backfillSkippedSatellites(spark: SparkSession,
       warehouseDir: String, already: DataFrame): Unit = {
@@ -233,43 +233,15 @@ object Runbook {
           ak0("last_update_block_height") === col("w_h"), "left_anti")
       case None => ak0
     }
-    val committed = BatchCommit.recover(spark, warehouseDir)
-    val next = committed + 1
-    val moves = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    // An empty recompute stages no file (see BatchCommit.stageTable).
-    moves ++= BatchCommit.stageTable(spark, warehouseDir, "account_changes",
-      ac.withColumn("block_date",
-        Stream.dayCol("changed_in_block_timestamp")),
-      Some("block_date"))
-    moves ++= BatchCommit.stageTable(spark, warehouseDir, "access_keys",
-      ak, None)
     // Mark every covered block repaired — including blocks that
     // contributed no rows (their recompute is settled; a later repair
-    // of an overlapping range must not re-fold them).
-    moves ++= BatchCommit.stageTable(spark, warehouseDir,
-      Stream.ReindexBackfilledTable,
-      ns.select(col("blockHash").as("block_hash")), None)
-    // Carry every live state table to the new version BEFORE advancing
-    // (cleanup deletes the old version's states).
-    Seq(Stream.PendingDir, Stream.PendingEdgesDir, Stream.TxRecentDir,
-      Stream.BlocksRecentDir).foreach { name =>
-      val p = BatchCommit.statePath(warehouseDir, committed, name)
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val hfs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (hfs.exists(hp))
-        scala.util.Try(spark.read.parquet(p)).foreach(df =>
-          BatchCommit.writeState(spark, warehouseDir, next, name, df))
-    }
-    BatchCommit.writeManifest(spark, warehouseDir, next, moves.map(_._2).toSeq)
-    BatchCommit.applyMoves(spark, warehouseDir, moves.toSeq)
-    BatchCommit.advance(spark, warehouseDir, next)
-    BatchCommit.cleanup(spark, warehouseDir, next)
-  }
-
-  private def parseBlocks(spark: SparkSession, inputDir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.option("wholetext", "true").text(inputDir)
-      .select(col("value")).as[String].map(BlockParser.parse _).toDF()
+    // of an overlapping range must not re-fold them). The commit
+    // carries every state table to the new version unchanged.
+    BatchCommit.commit(spark, warehouseDir,
+      BatchCommit.recover(spark, warehouseDir), states = Seq.empty,
+      tables = Seq("account_changes" -> ac, "access_keys" -> ak,
+        Stream.ReindexBackfilledTable ->
+          ns.select(col("blockHash").as("block_hash"))))
   }
 
   private def parseFlags(args: Array[String],

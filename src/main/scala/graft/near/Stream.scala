@@ -1,6 +1,6 @@
 package graft.near
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -106,7 +106,6 @@ object Stream {
       minHeight: Long = Long.MinValue,
       enableAccountChanges: Boolean = true,
       enableAccessKeys: Boolean = true): StreamingQuery = {
-    import spark.implicits._
     if (listenerRegistered.compareAndSet(false, true))
       spark.streams.addListener(Metrics.listener())
     spark.readStream
@@ -117,8 +116,7 @@ object Stream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val norm0 = batch.select(col("value")).as[String]
-          .map(BlockParser.parse _).toDF()
+        val norm0 = Ingest.parse(batch).toDF()
         val norm =
           if (minHeight == Long.MinValue) norm0
           else norm0.filter(col("blockHeight").cast("long") >= minHeight)
@@ -129,16 +127,6 @@ object Stream {
       }
       .start()
   }
-
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readIfExists(spark: SparkSession, path: String): Option[DataFrame] =
-    if (fs(spark, path).exists(new org.apache.hadoop.fs.Path(path)))
-      // An all-empty write leaves a schema-less dir; treat as absent.
-      scala.util.Try(spark.read.parquet(path)).toOption
-    else None
 
   /** Read a cross-batch state table at the COMMITTED version (absent =
     * empty) — the test/ops read surface; processBatch itself threads
@@ -156,237 +144,281 @@ object Stream {
       name: String): Option[DataFrame] = {
     def attempt(): (Long, Option[DataFrame]) = {
       val v = BatchCommit.currentVersion(spark, warehouseDir)
-      (v, readIfExists(spark, BatchCommit.statePath(warehouseDir, v, name)))
+      (v, BatchCommit.readState(spark, warehouseDir, v).get(name))
     }
     val (v1, df1) = attempt()
     if (BatchCommit.currentVersion(spark, warehouseDir) == v1) df1
     else attempt()._2
   }
 
-  /** One microbatch of the §3.1 DAG. Public so batch jobs and tests
-    * can drive it without a streaming query.
-    *
-    * `maxRetries` mirrors non-strict mode's 4-attempt budget
-    * (receipts.rs:231); pass Int.MaxValue for strict-mode semantics
-    * (unresolved receipts park forever instead of dropping — the
-    * deterministic analogue of strict mode's infinite retry,
-    * main.rs:261-272). `enableAccountChanges` / `enableEvents` mirror
-    * the reference's cargo feature gates (indexer/Cargo.toml:43-45).
-    *
-    * `commitHook` is a crash-injection seam for tests: invoked with a
-    * label at each step of the [[BatchCommit]] protocol ("staged",
-    * "manifest", "moved", "committed"); throwing from it simulates a
-    * crash at that point.
+  /** Same-height fork among the aggregated blocks: more blocks than
+    * heights. Only then does a batch pay the PK-dedup windows (receipt
+    * and outcome ids cannot collide otherwise; the JDBC mirror's PKs
+    * remain the unconditional guarantee).
     */
-  def processBatch(spark: SparkSession, norm0: DataFrame,
-      warehouseDir: String, maxRetries: Int = 4,
-      enableAccountChanges: Boolean = true,
-      enableEvents: Boolean = true,
-      enableAccessKeys: Boolean = true,
-      collisionWindowBlocks: Long = 1000L,
-      mirror: Option[JdbcSink.ConnectionFactory] = None,
-      recoveryLookbackDays: Int = 2,
-      fullRecoveryScan: Boolean = false,
-      commitHook: String => Unit = _ => ()): Unit = {
-    // Roll any interrupted previous batch back/forward FIRST — BEFORE
-    // the empty-batch early return, so a torn commit is healed as soon
-    // as the stream ticks, not only when data next arrives. Then read
-    // every state table at the committed version; this batch's state
-    // goes to version+1, invisible until the commit point.
-    val committed = BatchCommit.recover(spark, warehouseDir)
-    val nextVersion = committed + 1
-    def readStateV(name: String): Option[DataFrame] =
-      readIfExists(spark, BatchCommit.statePath(warehouseDir, committed, name))
-    // State outputs are written together with the table stagings (see
-    // the commit below), so they are only collected here.
-    val stateWrites = scala.collection.mutable.ArrayBuffer[(String, DataFrame)]()
-    def writeStateV(name: String, df: DataFrame): Unit =
-      stateWrites += ((name, df))
-    // Replay idempotency (S2's from-interruption −500 rewind,
-    // configs.rs:118-119): the reference replays whole blocks and
-    // relies on ON CONFLICT DO NOTHING; the parquet warehouse has no
-    // PKs, so an already-processed block hash inside the bounded
-    // `_blocks_recent` window is dropped WHOLE before any transform —
-    // one state covers every per-block table. A block hash identifies
-    // its content, so partial re-delivery cannot occur; same-height
-    // forks have distinct hashes and pass through untouched.
-    val blocksSeen = readStateV(BlocksRecentDir)
-    val normIn = blocksSeen match {
-      case Some(seen) => norm0.join(
-        broadcast(seen.select(col("block_hash").as("seen_bh"))),
-        norm0("blockHash") === col("seen_bh"), "left_anti")
-      case None => norm0
-    }
-    val norm = normIn.persist()
-    try {
-      // One job over the persisted batch answers every batch-level
-      // question: is it empty (nothing new, or every block already
-      // seen), the S9 block counter + latest-height gauge
-      // (metrics.rs:6-14), the recovery floor's batch day, and whether
-      // it holds a same-height fork (more blocks than heights).
-      val stats = norm.agg(count(lit(1)),
-        max(col("blockHeight").cast("long")),
-        min(expr("CAST(blockTimestamp AS DECIMAL(38,0)) div 86400000000000")
-          .cast("long")),
-        countDistinct(col("blockHeight"))).collect()(0)
-      if (stats.getLong(0) == 0L) return
-      val maxHeight = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-      Metrics.recordBatch(stats.getLong(0), maxHeight)
-      // Recovery watermark for the mirrorless lineage fallback: parents
-      // of an in-flight receipt live within the replay window (the
-      // reference rewinds 500 blocks ≈ minutes; lookback days are a
-      // generous cover), so the J1/J2/J3 parquet reads below prune to
-      // `block_date >= floor-day − lookback` instead of O(history).
-      // The floor folds in the OLDEST carried `_pending` receipt's day
-      // — a parked receipt's parent lives near the PARK day, not this
-      // batch's day, and a batch-day-only floor would hide it forever
-      // (the reference's DB lookups have no horizon, receipts.rs:
-      // 409-429).
-      val minBatchDay = if (stats.isNullAt(2)) 0L else stats.getLong(2)
-      val pendingState = readStateV(PendingDir)
-      val minDay = pendingState.map { p =>
-        val r = p.agg(min(
-          expr("CAST(blockTimestamp AS DECIMAL(38,0)) div 86400000000000")
-            .cast("long"))).collect()(0)
-        if (r.isNullAt(0)) minBatchDay else math.min(minBatchDay, r.getLong(0))
-      }.getOrElse(minBatchDay)
-      // LocalDate.ofEpochDay → valueOf is a plain y/m/d construction —
-      // no millis-via-local-timezone shift (same rationale as dayCol).
-      val recoveryFloor = java.sql.Date.valueOf(
-        java.time.LocalDate.ofEpochDay(minDay - recoveryLookbackDays))
-      def pruneRecovery(df: DataFrame): DataFrame =
-        df.filter(col("block_date") >= lit(recoveryFloor))
-      // Cross-batch issue84 handling (transactions.rs:43-89): within-
-      // batch duplicates are resolved by transactionsBase; against
-      // EARLIER batches the discriminator is the converted receipt id —
-      // same hash + same receipt = fork re-delivery (dropped, PK
-      // dedup), same hash + different receipt = genuine collision
-      // (`_issue84_<height>` suffix). The lookup side is NOT the
-      // warehouse (an O(history) scan per batch) but the `_tx_recent`
-      // state: first-seen (hash, receipt) pairs from the trailing
-      // `collisionWindowBlocks` blocks — the deterministic analogue of
-      // the reference's bounded recent-tx cache. Collisions older than
-      // the window are missed, the same trade the reference's eviction
-      // makes; the state is broadcast-sized by construction.
-      val txBase0 = Transforms.transactionsBase(norm)
-      val txRecent = readStateV(TxRecentDir)
-      val txBase = txRecent match {
-        case Some(recent) =>
-          // A tx row's identity is its converted receipt id (globally
-          // unique): a batch row whose cid is already in state is a
-          // fork re-delivery of an ALREADY-WRITTEN row — original or
-          // suffixed collision — and is dropped outright, the parquet
-          // analogue of ON CONFLICT DO NOTHING. (Pair-equality against
-          // the hash's single stored cid would re-suffix a re-delivered
-          // collision row into a duplicate.) Surviving rows whose hash
-          // is known under a different cid are genuine collisions.
-          txBase0
-            .join(broadcast(recent.select(col("cid").as("seen_cid"))),
-              txBase0("t.convertedIntoReceiptId") === col("seen_cid"), "left")
-            .filter(col("seen_cid").isNull)
-            .join(broadcast(recent.select(col("tx_hash").as("wh_hash"))
-                .distinct()),
-              txBase0("transaction_hash") === col("wh_hash"), "left")
-            .withColumn("transaction_hash",
-              when(col("wh_hash").isNotNull,
-                concat(col("transaction_hash"), lit("_issue84_"),
-                  col("blockHeight")))
-                .otherwise(col("transaction_hash")))
-            .drop("seen_cid", "wh_hash")
-        case None => txBase0
-      }
-      val transactions = Transforms.transactions(txBase)
-      // Fork-dedup windows are paid only when the batch actually holds
-      // a same-height fork (see Ingest.allTables for the rationale).
-      val hasForks = stats.getLong(0) > stats.getLong(3)
-      def pkGuard(df: DataFrame, pk: Seq[org.apache.spark.sql.Column],
-          order: Seq[org.apache.spark.sql.Column]): DataFrame =
-        if (hasForks) Transforms.dedupPk(df, pk, order) else df
-      val rBaseNew = pkGuard(Transforms.receiptsBase(norm),
-          Seq(col("r.receiptId")), Seq(col("blockTimestamp"), col("blockHash")))
-        .withColumn("retries", lit(0))
-      val oBase = pkGuard(Transforms.outcomesBase(norm),
-        Seq(col("o.receiptId")),
-        Seq(col("blockTimestamp"), col("blockHash")))
-      val outcomeReceipts = Transforms.executionOutcomeReceipts(oBase)
-      val outputDataNew = Transforms.actionReceiptOutputData(rBaseNew)
-      val dataReceiptsNew = Transforms.dataReceipts(rBaseNew)
+  private[near] def forkTest: Column =
+    count(lit(1)) > countDistinct(col("blockHeight"))
 
-      // Pending receipts from earlier batches re-enter the DAG; their
-      // receipts row AND satellites are written in the batch where
-      // they finally resolve (the reference skips satellites for
-      // skipped receipts, receipts.rs:137-147).
-      val rBase = pendingState
-        .map(p => Transforms.dedupPk(rBaseNew.unionByName(p),
-          Seq(col("r.receiptId")),
-          Seq(col("blockTimestamp"), col("blockHash"), col("retries"))))
-        .getOrElse(rBaseNew)
-        .localCheckpoint(true)
+  /** Where the lineage fallback looks up parents: the JDBC mirror's
+    * point queries (MirrorLookup), or the parquet warehouse with the
+    * time-partitioned reads pruned to `block_date >= floor`.
+    */
+  private[near] sealed trait Fallback
+  private[near] final case class MirrorFallback(
+      factory: JdbcSink.ConnectionFactory) extends Fallback
+  private[near] final case class WarehouseFallback(warehouseDir: String,
+      floor: java.sql.Date) extends Fallback
 
-      val newEdges = Lineage
-        .edges(outcomeReceipts, outputDataNew, dataReceiptsNew)
-        .withColumn("retries", lit(0))
-      val edges = readStateV(PendingEdgesDir)
-        .map(newEdges.unionByName(_)).getOrElse(newEdges)
-        .localCheckpoint(true)
-      val edgeSet = edges.select(col("child"), col("parent"))
+  /** A batch's 17 tables, its next state, and the receipts that used
+    * up their retries in it.
+    */
+  private[near] final case class Dag(tables: Map[String, DataFrame],
+      state: Seq[(String, DataFrame)], dropped: DataFrame)
 
-      // Pass 1: resolve from this batch's transactions ∪ the carried
-      // "announced but not yet arrived" map — mappings for receipt/data
-      // ids whose edges were seen in earlier batches but whose receipt
-      // rows haven't landed. Entries are dropped the batch their
-      // receipt arrives, the remove-on-read parity of the reference's
-      // cache (receipts.rs:191-202) — so the state stays bounded by
-      // in-flight receipts, not chain length.
-      val seeds = Lineage.seeds(transactions)
-      val ahead = readStateV(LineageAheadDir)
-      val seeded = ahead.map(seeds.unionByName(_)).getOrElse(seeds)
-      val pass1 = Lineage.resolveGraph(seeded, edgeSet)
+  /** The §3.1 DAG over one batch of parsed blocks: the 17 tables with
+    * lineage resolved, and the state the next batch carries in. The
+    * batch path ([[Ingest.allTables]]) is the case with no carried state
+    * and no fallback; [[processBatch]] passes the committed state and a
+    * warehouse or mirror fallback — the stream is the batch query run
+    * incrementally over carried state.
+    *
+    * `state` maps state-table names to their committed rows (absent =
+    * empty): `_pending` / `_pending_edges` (receipts and edges still
+    * awaiting a parent), `_lineage_ahead` (ids announced by edges whose
+    * receipts have not arrived), `_tx_recent` and `_blocks_recent` (the
+    * trailing windows of stored tx hashes and block hashes, kept from
+    * height `recentFrom` on). `hasForks` says the batch holds a
+    * same-height fork ([[forkTest]]).
+    *
+    * Materialisation: each base that feeds several outputs (txBase,
+    * the receipt and outcome bases, the edges, the resolved and the
+    * unresolved receipts) is a lazy localCheckpoint — computed once, by
+    * the first job that reads it (the lineage probe or one of the
+    * batch's concurrent writes), not by a job of its own. Once
+    * checkpointed, its blocks do not survive executor loss: a lost
+    * block fails the read loudly instead of recomputing against a
+    * half-rebuilt base — fine for one batch's lifetime, not for a
+    * long-lived handle.
+    */
+  private[near] def dag(norm: DataFrame, hasForks: Boolean,
+      state: Map[String, DataFrame], fallback: Option[Fallback] = None,
+      maxRetries: Int = Int.MaxValue,
+      recentFrom: Long = Long.MinValue): Dag = {
+    def shared(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+    def pkGuard(df: DataFrame, pk: Seq[Column], order: Seq[Column]): DataFrame =
+      if (hasForks) Transforms.dedupPk(df, pk, order) else df
+    // Cross-batch issue84 handling (transactions.rs:43-89): within-
+    // batch duplicates are resolved by transactionsBase; against
+    // EARLIER batches the discriminator is the converted receipt id —
+    // same hash + same receipt = fork re-delivery (dropped, PK
+    // dedup), same hash + different receipt = genuine collision
+    // (`_issue84_<height>` suffix). The lookup side is NOT the
+    // warehouse (an O(history) scan per batch) but the `_tx_recent`
+    // state: first-seen (hash, receipt) pairs from the trailing
+    // window — the deterministic analogue of the reference's bounded
+    // recent-tx cache. Collisions older than the window are missed,
+    // the same trade the reference's eviction makes; the state is
+    // broadcast-sized by construction.
+    val txBase0 = Transforms.transactionsBase(norm)
+    val txRecent = state.get(TxRecentDir)
+    val txBase = shared(txRecent match {
+      case Some(recent) =>
+        // A tx row's identity is its converted receipt id (globally
+        // unique): a batch row whose cid is already in state is a
+        // fork re-delivery of an ALREADY-WRITTEN row — original or
+        // suffixed collision — and is dropped outright, the parquet
+        // analogue of ON CONFLICT DO NOTHING. (Pair-equality against
+        // the hash's single stored cid would re-suffix a re-delivered
+        // collision row into a duplicate.) Surviving rows whose hash
+        // is known under a different cid are genuine collisions.
+        txBase0
+          .join(broadcast(recent.select(col("cid").as("seen_cid"))),
+            txBase0("t.convertedIntoReceiptId") === col("seen_cid"), "left")
+          .filter(col("seen_cid").isNull)
+          .join(broadcast(recent.select(col("tx_hash").as("wh_hash"))
+              .distinct()),
+            txBase0("transaction_hash") === col("wh_hash"), "left")
+          .withColumn("transaction_hash",
+            when(col("wh_hash").isNotNull,
+              concat(col("transaction_hash"), lit("_issue84_"),
+                col("blockHeight")))
+              .otherwise(col("transaction_hash")))
+          .drop("seen_cid", "wh_hash")
+      case None => txBase0
+    })
+    val transactions = Transforms.transactions(txBase)
+    // Same-height fork branches can deliver the same receipt/outcome in
+    // both blocks; dedup once at the base (satellites inherit) — the
+    // parquet-side analogue of the reference's ON-CONFLICT PKs.
+    val rNew = shared(pkGuard(Transforms.receiptsBase(norm),
+        Seq(col("r.receiptId")), Seq(col("blockTimestamp"), col("blockHash")))
+      .withColumn("retries", lit(0)))
+    val oBase = shared(pkGuard(Transforms.outcomesBase(norm),
+      Seq(col("o.receiptId")),
+      Seq(col("blockTimestamp"), col("blockHash"))))
+    val outcomeReceipts = Transforms.executionOutcomeReceipts(oBase)
 
-      val frontier = edgeSet.select(col("parent"))
-        .unionByName(rBase.select(col("r.receiptId").as("parent")))
-        .distinct()
-        .join(pass1, col("parent") === col("child"), "left_anti")
-        .localCheckpoint(true)
+    // Pending receipts from earlier batches re-enter the DAG; their
+    // receipts row AND satellites are written in the batch where
+    // they finally resolve (the reference skips satellites for
+    // skipped receipts, receipts.rs:137-147).
+    val rBase = state.get(PendingDir)
+      .map(p => shared(Transforms.dedupPk(rNew.unionByName(p),
+        Seq(col("r.receiptId")),
+        Seq(col("blockTimestamp"), col("blockHash"), col("retries")))))
+      .getOrElse(rNew)
 
-      // Warehouse fallback — the reference's three DB lookups
-      // (J3 receipts.rs:409-429, J2 :348-375, J1 :249-264). Runs ONLY
-      // when the frontier is non-empty: with the ahead map, in-order
-      // delivery keeps it empty, so steady-state batches never rescan
-      // warehouse history. With a JDBC `mirror` configured the lookups
-      // are indexed point queries over the bounded frontier
-      // (MirrorLookup — the reference's own access pattern); the
-      // parquet joins below are the mirrorless O(history) recovery
-      // route.
-      val resolved = (if (frontier.isEmpty) pass1
-      else mirror match {
-        case Some(factory) =>
-          // Point lookups run ON THE EXECUTORS (each partition of the
-          // frontier opens its own mirror connection and resolves its
-          // slice) — a worst-case recovery frontier never rides the
-          // driver heap.
-          val extra = MirrorLookup.resolveFrontierDistributed(factory, frontier)
-          Lineage.resolveGraph(
-            seeded.unionByName(pass1).unionByName(extra), edgeSet)
-        case None =>
-      {
+    // Lineage resolves over ALL of the batch's edges (carried ones
+    // included)…
+    val newEdges = Lineage.edges(outcomeReceipts,
+        Transforms.actionReceiptOutputData(rNew), Transforms.dataReceipts(rNew))
+      .withColumn("retries", lit(0))
+    val edges = shared(state.get(PendingEdgesDir)
+      .map(newEdges.unionByName(_)).getOrElse(newEdges))
+    val edgeSet = edges.select(col("child"), col("parent"))
+
+    // Pass 1: resolve from this batch's transactions ∪ the carried
+    // "announced but not yet arrived" map — mappings for receipt/data
+    // ids whose edges were seen in earlier batches but whose receipt
+    // rows haven't landed. Entries are dropped the batch their
+    // receipt arrives, the remove-on-read parity of the reference's
+    // cache (receipts.rs:191-202) — so the state stays bounded by
+    // in-flight receipts, not chain length.
+    val seeds = Lineage.seeds(transactions)
+    val seeded = state.get(LineageAheadDir)
+      .map(seeds.unionByName(_)).getOrElse(seeds)
+    val pass1 = Lineage.resolveGraph(seeded, edgeSet)
+    // Every resolveGraph result is already materialised (driver rows or
+    // checkpointed rounds), so `resolved` needs no checkpoint of its own.
+    val resolved = fallback.fold(pass1)(
+      resolveFrontier(_, seeded, pass1, edgeSet, rBase, edges))
+
+    // Carry forward mappings whose ids haven't arrived/been consumed.
+    val consumed = rBase.select(col("r.receiptId").as("seen"))
+      .unionByName(rBase.select(col("r.dataId").as("seen"))
+        .filter(col("seen").isNotNull))
+      .distinct()
+    val aheadNext = resolved
+      .join(consumed, col("child") === col("seen"), "left_anti")
+      .select(col("child"), col("tx"))
+    val lineage = resolved.select(
+      col("child").as("lineage_receipt_id"),
+      col("tx").as("originated_from_transaction_hash"))
+    // …but satellite tables exist only for receipts that resolved —
+    // the reference skips satellites for skipped receipts
+    // (receipts.rs:137-147 filter on skipping_receipt_ids).
+    val resolvedBase = shared(rBase.join(lineage,
+      rBase("r.receiptId") === lineage("lineage_receipt_id"), "left_semi"))
+    // Park what still didn't resolve; drop after maxRetries.
+    val unresolvedAll = shared(rBase.join(lineage,
+      rBase("r.receiptId") === lineage("lineage_receipt_id"), "left_anti"))
+    val unresolvedEdges = edges
+      .join(resolved.select(col("child").as("rc")),
+        col("child") === col("rc"), "left_anti")
+      .filter(col("retries") < maxRetries)
+      .withColumn("retries", col("retries") + 1)
+
+    def eventPk(df: DataFrame) = pkGuard(df,
+      Seq(col("emitted_for_receipt_id"),
+        col("emitted_index_of_event_entry_in_shard")),
+      Seq(col("emitted_at_block_timestamp")))
+    val tables = Map(
+      "blocks" -> Transforms.blocks(norm),
+      // a same-height fork can re-deliver its sibling's chunk
+      "chunks" -> pkGuard(Transforms.chunks(norm),
+        Seq(col("chunk_hash")), Seq(col("included_in_block_hash"))),
+      "transactions" -> transactions,
+      "transaction_actions" -> Transforms.transactionActions(txBase),
+      // receipts: new ∪ formerly-pending, lineage-gated
+      "receipts" -> Transforms.receipts(rBase, lineage),
+      // satellites: written exactly once, in the batch where the
+      // receipt resolves (never for dropped orphans)
+      "action_receipts" -> Transforms.actionReceipts(resolvedBase),
+      "action_receipt_actions" -> Transforms.actionReceiptActions(resolvedBase),
+      "action_receipt_input_data" ->
+        Transforms.actionReceiptInputData(resolvedBase),
+      "action_receipt_output_data" ->
+        Transforms.actionReceiptOutputData(resolvedBase),
+      "data_receipts" -> Transforms.dataReceipts(resolvedBase),
+      "execution_outcomes" -> Transforms.executionOutcomes(oBase),
+      "execution_outcome_receipts" -> outcomeReceipts,
+      // Registry DELTAS: per-batch last-wins folds appended here; the
+      // current view is Warehouse.accountsCurrent/accessKeysCurrent
+      // (the JDBC mirror gets the guarded upsert, JdbcSink).
+      "accounts" -> Transforms.accountsRegistry(Transforms.accountEvents(norm)),
+      "access_keys" ->
+        Transforms.accessKeysRegistry(Transforms.accessKeyEvents(norm)),
+      "account_changes" -> Transforms.accountChanges(norm),
+      "assets__fungible_token_events" -> eventPk(Events.ftEvents(norm)),
+      "assets__non_fungible_token_events" -> eventPk(Events.nftEvents(norm)),
+    )
+
+    // Recent-hash states: first-seen receipt per stored hash /
+    // processed block hashes, both pruned to the trailing window.
+    val batchPairs = txBase.select(
+      col("transaction_hash").as("tx_hash"),
+      col("t.convertedIntoReceiptId").as("cid"),
+      col("blockHeight").cast("long").as("h"))
+    val batchBlocks = norm.select(col("blockHash").as("block_hash"),
+      col("blockHeight").cast("long").as("h"))
+    def recent(batch: DataFrame, carried: Option[DataFrame], pk: String) =
+      Transforms.dedupPk(carried.map(batch.unionByName(_)).getOrElse(batch),
+        Seq(col(pk)), Seq(col("h")))
+        .filter(col("h") >= lit(recentFrom))
+    Dag(tables, Seq(
+      LineageAheadDir -> aheadNext,
+      PendingDir -> unresolvedAll.filter(col("retries") < maxRetries)
+        .withColumn("retries", col("retries") + 1),
+      PendingEdgesDir -> unresolvedEdges,
+      TxRecentDir -> recent(batchPairs, txRecent, "tx_hash"),
+      BlocksRecentDir ->
+        recent(batchBlocks, state.get(BlocksRecentDir), "block_hash")),
+      unresolvedAll.filter(col("retries") >= maxRetries))
+  }
+
+  /** Lineage for the frontier pass 1 left: parents no batch row or
+    * carried state resolves, looked up where `fallback` says — the
+    * reference's three DB lookups (J3 receipts.rs:409-429, J2
+    * :348-375, J1 :249-264). Runs ONLY when the frontier is non-empty:
+    * with the ahead map, in-order delivery keeps it empty, so
+    * steady-state batches never rescan warehouse history.
+    */
+  private def resolveFrontier(fallback: Fallback, seeded: DataFrame,
+      pass1: DataFrame, edgeSet: DataFrame, rBase: DataFrame,
+      edges: DataFrame): DataFrame = {
+    val frontier = edgeSet.select(col("parent"))
+      .unionByName(rBase.select(col("r.receiptId").as("parent")))
+      .distinct()
+      .join(pass1, col("parent") === col("child"), "left_anti")
+      .localCheckpoint(true)
+    if (frontier.isEmpty) return pass1
+    fallback match {
+      case MirrorFallback(factory) =>
+        // Point lookups run ON THE EXECUTORS (each partition of the
+        // frontier opens its own mirror connection and resolves its
+        // slice) — a worst-case recovery frontier never rides the
+        // driver heap.
+        val extra = MirrorLookup.resolveFrontierDistributed(factory, frontier)
+        Lineage.resolveGraph(
+          seeded.unionByName(pass1).unionByName(extra), edgeSet)
+      case WarehouseFallback(warehouseDir, floor) =>
+        val spark = frontier.sparkSession
         // The two time-partitioned lookup tables prune to the recovery
-        // window (pruneRecovery); execution_outcome_receipts and
+        // window; execution_outcome_receipts and
         // action_receipt_output_data carry no timestamp column (their
         // reference schema has none) and are narrow 2-3 column scans —
         // the expensive receipts/transactions history is what the
         // partition predicate bounds.
         def warehouseSeeds(fr: DataFrame, prune: Boolean): Seq[DataFrame] = {
-          def bound(df: DataFrame) = if (prune) pruneRecovery(df) else df
-          val whReceipts = readIfExists(spark, s"$warehouseDir/receipts")
+          def bound(df: DataFrame) =
+            if (prune) df.filter(col("block_date") >= lit(floor)) else df
+          def read(t: String) = Warehouse.tableOpt(spark, warehouseDir, t)
+          val whReceipts = read("receipts")
             .map(df => bound(df).select(col("receipt_id"),
               col("originated_from_transaction_hash").as("tx")))
-          val whTx = readIfExists(spark, s"$warehouseDir/transactions")
-            .map(bound)
-          val whEor = readIfExists(spark,
-            s"$warehouseDir/execution_outcome_receipts")
-          val whOutput = readIfExists(spark,
-            s"$warehouseDir/action_receipt_output_data")
+          val whTx = read("transactions").map(bound)
+          val whEor = read("execution_outcome_receipts")
+          val whOutput = read("action_receipt_output_data")
           // J3: id was a transaction's converted receipt
           val j3 = whTx.map(wt =>
             broadcast(fr)
@@ -418,242 +450,213 @@ object Stream {
           }
           j3 ++ j2 ++ j1
         }
-        // Pass 2: re-run the fixpoint with the (pruned) warehouse
-        // seeds folded in.
+        // Pass 2: re-run the fixpoint with the pruned warehouse seeds
+        // folded in.
         val pass2 = Lineage.resolveGraph(
-          (Seq(seeded, pass1) ++ warehouseSeeds(frontier,
-            prune = !fullRecoveryScan)).reduce(_ unionByName _), edgeSet)
-        if (fullRecoveryScan) pass2
-        else {
-          // A frontier residue after the PRUNED pass that has ALREADY
-          // waited a full batch (retries >= 1) means a parent older
-          // than the lookback (long-postponed data receipt, recovery
-          // after extended downtime). Silently parking it would drop
-          // data the reference's unbounded indexed lookups
-          // (receipts.rs:409-429) resolve — so that residue retries
-          // against the UNPRUNED history, metered via Metrics. The
-          // retries gate keeps ordinary out-of-order arrivals (parent
-          // simply in a FUTURE block, the common case) from paying a
-          // full-history scan: they park for one batch first, and
-          // almost always resolve from the next batch's seeds.
-          val residue = frontier
-            .join(pass2, col("parent") === col("child"), "left_anti")
-            .localCheckpoint(true)
-          val rescan =
-            if (residue.isEmpty) residue
-            else {
-              val retriedIds = rBase.filter(col("retries") >= 1)
-                .select(col("r.receiptId").as("parent"))
-                .unionByName(edges.filter(col("retries") >= 1)
-                  .select(col("parent")))
-                .distinct()
-              residue.join(retriedIds, Seq("parent"), "left_semi")
-                .localCheckpoint(true)
-            }
-          val unpruned =
-            if (rescan.isEmpty) Seq.empty
-            else warehouseSeeds(rescan, prune = false)
-          // An empty seed list means no lookup tables exist yet — the
-          // residue is ordinary out-of-order arrivals on a young
-          // warehouse, not a lookback miss; parking handles it.
-          if (unpruned.isEmpty) pass2
+          (Seq(seeded, pass1) ++ warehouseSeeds(frontier, prune = true))
+            .reduce(_ unionByName _), edgeSet)
+        // A frontier residue after the PRUNED pass that has ALREADY
+        // waited a full batch (retries >= 1) means a parent older
+        // than the lookback (long-postponed data receipt, recovery
+        // after extended downtime). Silently parking it would drop
+        // data the reference's unbounded indexed lookups
+        // (receipts.rs:409-429) resolve — so that residue retries
+        // against the UNPRUNED history, metered via Metrics. The
+        // retries gate keeps ordinary out-of-order arrivals (parent
+        // simply in a FUTURE block, the common case) from paying a
+        // full-history scan: they park for one batch first, and
+        // almost always resolve from the next batch's seeds.
+        val residue = frontier
+          .join(pass2, col("parent") === col("child"), "left_anti")
+          .localCheckpoint(true)
+        val rescan =
+          if (residue.isEmpty) residue
           else {
-            Metrics.recordLineageFullRescan(rescan.count())
-            Lineage.resolveGraph(
-              (Seq(seeded, pass2) ++ unpruned).reduce(_ unionByName _),
-              edgeSet)
+            val retriedIds = rBase.filter(col("retries") >= 1)
+              .select(col("r.receiptId").as("parent"))
+              .unionByName(edges.filter(col("retries") >= 1)
+                .select(col("parent")))
+              .distinct()
+            residue.join(retriedIds, Seq("parent"), "left_semi")
+              .localCheckpoint(true)
           }
+        val unpruned =
+          if (rescan.isEmpty) Seq.empty
+          else warehouseSeeds(rescan, prune = false)
+        // An empty seed list means no lookup tables exist yet — the
+        // residue is ordinary out-of-order arrivals on a young
+        // warehouse, not a lookback miss; parking handles it.
+        if (unpruned.isEmpty) pass2
+        else {
+          Metrics.recordLineageFullRescan(rescan.count())
+          Lineage.resolveGraph(
+            (Seq(seeded, pass2) ++ unpruned).reduce(_ unionByName _),
+            edgeSet)
         }
-      }
-      }).localCheckpoint(true)
+    }
+  }
 
-      // Carry forward mappings whose ids haven't arrived/been consumed.
-      val consumed = rBase.select(col("r.receiptId").as("seen"))
-        .unionByName(rBase.select(col("r.dataId").as("seen"))
-          .filter(col("seen").isNotNull))
-        .distinct()
-      val aheadNext = resolved
-        .join(consumed, col("child") === col("seen"), "left_anti")
-        .select(col("child"), col("tx"))
-      writeStateV(LineageAheadDir, aheadNext)
-      val lineage = resolved.select(
-        col("child").as("lineage_receipt_id"),
-        col("tx").as("originated_from_transaction_hash"))
-      val resolvedBase = rBase.join(lineage,
-        rBase("r.receiptId") === lineage("lineage_receipt_id"), "left_semi")
-
-      // Park what still didn't resolve; drop after maxRetries.
-      // Checkpointed once: it is both written as next-batch state and
-      // (in non-strict mode) filtered again for the drop log below —
-      // residue is the tiny set of receipts still awaiting parents.
-      val unresolvedAll = rBase
-        .join(lineage, rBase("r.receiptId") === lineage("lineage_receipt_id"),
-          "left_anti")
-        .localCheckpoint(true)
-      val unresolvedReceipts = unresolvedAll
-        .filter(col("retries") < maxRetries)
-        .withColumn("retries", col("retries") + 1)
-      writeStateV(PendingDir, unresolvedReceipts)
-      // Non-strict drop logging (receipts.rs:93-104 parity): the
-      // reference warns per skipped receipt with its id and context
-      // before moving on; mirror that — id, retry budget, and the
-      // receipt's block timestamp (its age) — capped at 100 lines per
-      // batch so a poisoned feed can't flood the log. Strict mode
-      // (maxRetries = MaxValue) never drops, so never logs.
-      if (maxRetries != Int.MaxValue) {
-        val dropped = unresolvedAll.filter(col("retries") >= maxRetries)
-        val sample = dropped
-          .select(col("r.receiptId"), col("blockTimestamp"), col("retries"))
-          .limit(100).collect()
-        if (sample.nonEmpty) {
-          val total = if (sample.length < 100) sample.length.toLong
-                      else dropped.count()
-          Metrics.recordPendingDropped(total)
-          sample.foreach { r =>
-            System.err.println(s"[graft-stream] dropping receipt " +
-              s"${r.getString(0)} after ${r.getInt(2)} retry batches " +
-              s"(block_timestamp=${r.get(1)}): parent transaction never " +
-              "resolved — non-strict mode skips it (receipts.rs:93-104)")
-          }
-          if (total > sample.length)
-            System.err.println(s"[graft-stream] ... and " +
-              s"${total - sample.length} more dropped receipts this batch")
-        }
-      }
-      val unresolvedEdges = edges
-        .join(resolved.select(col("child").as("rc")),
-          col("child") === col("rc"), "left_anti")
-        .filter(col("retries") < maxRetries)
-        .withColumn("retries", col("retries") + 1)
-      writeStateV(PendingEdgesDir, unresolvedEdges)
-
-      val tables = Map(
-        "blocks" -> Transforms.blocks(norm),
-        // a same-height fork can re-deliver its sibling's chunk
-        "chunks" -> pkGuard(Transforms.chunks(norm),
-          Seq(col("chunk_hash")), Seq(col("included_in_block_hash"))),
-        "transactions" -> transactions,
-        "transaction_actions" -> Transforms.transactionActions(txBase),
-        // receipts: new ∪ formerly-pending, lineage-gated
-        "receipts" -> Transforms.receipts(rBase, lineage),
-        // satellites: written exactly once, in the batch where the
-        // receipt resolves (never for dropped orphans)
-        "action_receipts" -> Transforms.actionReceipts(resolvedBase),
-        "action_receipt_actions" ->
-          Transforms.actionReceiptActions(resolvedBase),
-        "action_receipt_input_data" ->
-          Transforms.actionReceiptInputData(resolvedBase),
-        "action_receipt_output_data" ->
-          Transforms.actionReceiptOutputData(resolvedBase),
-        "data_receipts" -> Transforms.dataReceipts(resolvedBase),
-        "execution_outcomes" -> Transforms.executionOutcomes(oBase),
-        "execution_outcome_receipts" -> outcomeReceipts,
-        // Registry DELTAS: per-batch last-wins folds appended here; the
-        // current view is Warehouse.accountsCurrent/accessKeysCurrent
-        // (the JDBC mirror gets the guarded upsert, JdbcSink).
-        "accounts" ->
-          Transforms.accountsRegistry(Transforms.accountEvents(norm)),
-      ) ++ (if (enableAccessKeys)
-        // non-strict mode skips the access-keys registry along with
-        // account_changes (TROBLESHOOTING.md:104) — a later strict
-        // re-index appends the skipped range's deltas and the
-        // compacted view converges.
-        Map("access_keys" ->
-          Transforms.accessKeysRegistry(Transforms.accessKeyEvents(norm)))
-      else Map.empty) ++ (if (enableAccountChanges)
-        Map("account_changes" -> Transforms.accountChanges(norm))
-      else Map.empty) ++ (if (!enableAccountChanges || !enableAccessKeys)
-        // Non-strict ledger: re-index-range's backfill gates on THIS,
-        // not on inferred table presence (see the constant's note).
-        Map(NonStrictBlocksTable -> norm.select(
+  /** One microbatch: [[dag]] over the blocks not seen before, with the
+    * committed state and the lineage fallback, committed through
+    * [[BatchCommit.commit]]. Public so batch jobs and tests can drive
+    * it without a streaming query.
+    *
+    * `maxRetries` mirrors non-strict mode's 4-attempt budget
+    * (receipts.rs:231); pass Int.MaxValue for strict-mode semantics
+    * (unresolved receipts park forever instead of dropping — the
+    * deterministic analogue of strict mode's infinite retry,
+    * main.rs:261-272). `enableAccountChanges` / `enableAccessKeys` are
+    * non-strict mode's two skipped tables (TROBLESHOOTING.md:104).
+    * `collisionWindowBlocks` is the trailing window of `_tx_recent` and
+    * `_blocks_recent` (≥ the 500-block interruption rewind);
+    * `recoveryLookbackDays` bounds the mirrorless fallback's first,
+    * pruned pass.
+    *
+    * `commitHook` is a crash-injection seam for tests: invoked with a
+    * label at each step of the [[BatchCommit]] protocol ("staged",
+    * "manifest", "moved", "committed"); throwing from it simulates a
+    * crash at that point.
+    */
+  def processBatch(spark: SparkSession, norm0: DataFrame,
+      warehouseDir: String, maxRetries: Int = 4,
+      enableAccountChanges: Boolean = true,
+      enableAccessKeys: Boolean = true,
+      collisionWindowBlocks: Long = 1000L,
+      mirror: Option[JdbcSink.ConnectionFactory] = None,
+      recoveryLookbackDays: Int = 2,
+      commitHook: String => Unit = _ => ()): Unit = {
+    // Roll any interrupted previous batch back/forward FIRST — BEFORE
+    // the empty-batch early return, so a torn commit is healed as soon
+    // as the stream ticks, not only when data next arrives. Then read
+    // every state table at the committed version; this batch's state
+    // goes to version+1, invisible until the commit point.
+    val committed = BatchCommit.recover(spark, warehouseDir)
+    val state = BatchCommit.readState(spark, warehouseDir, committed)
+    // Replay idempotency (S2's from-interruption −500 rewind,
+    // configs.rs:118-119): the reference replays whole blocks and
+    // relies on ON CONFLICT DO NOTHING; the parquet warehouse has no
+    // PKs, so an already-processed block hash inside the bounded
+    // `_blocks_recent` window is dropped WHOLE before any transform —
+    // one state covers every per-block table. A block hash identifies
+    // its content, so partial re-delivery cannot occur; same-height
+    // forks have distinct hashes and pass through untouched.
+    val normIn = state.get(BlocksRecentDir) match {
+      case Some(seen) => norm0.join(
+        broadcast(seen.select(col("block_hash").as("seen_bh"))),
+        norm0("blockHash") === col("seen_bh"), "left_anti")
+      case None => norm0
+    }
+    val norm = normIn.persist()
+    try {
+      // One job over the persisted batch answers every batch-level
+      // question: is it empty (nothing new, or every block already
+      // seen), the S9 block counter + latest-height gauge
+      // (metrics.rs:6-14), the recovery floor's batch day, and whether
+      // it holds a same-height fork.
+      val stats = norm.agg(count(lit(1)),
+        max(col("blockHeight").cast("long")),
+        min(expr("CAST(blockTimestamp AS DECIMAL(38,0)) div 86400000000000")
+          .cast("long")),
+        forkTest).collect()(0)
+      if (stats.getLong(0) == 0L) return
+      val maxHeight = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+      Metrics.recordBatch(stats.getLong(0), maxHeight)
+      // Recovery watermark for the mirrorless lineage fallback: parents
+      // of an in-flight receipt live within the replay window (the
+      // reference rewinds 500 blocks ≈ minutes; lookback days are a
+      // generous cover), so the J1/J2/J3 parquet reads prune to
+      // `block_date >= floor-day − lookback` instead of O(history).
+      // The floor folds in the OLDEST carried `_pending` receipt's day
+      // — a parked receipt's parent lives near the PARK day, not this
+      // batch's day, and a batch-day-only floor would hide it forever
+      // (the reference's DB lookups have no horizon, receipts.rs:
+      // 409-429).
+      val minBatchDay = if (stats.isNullAt(2)) 0L else stats.getLong(2)
+      val minDay = state.get(PendingDir).map { p =>
+        val r = p.agg(min(
+          expr("CAST(blockTimestamp AS DECIMAL(38,0)) div 86400000000000")
+            .cast("long"))).collect()(0)
+        if (r.isNullAt(0)) minBatchDay else math.min(minBatchDay, r.getLong(0))
+      }.getOrElse(minBatchDay)
+      // LocalDate.ofEpochDay → valueOf is a plain y/m/d construction —
+      // no millis-via-local-timezone shift (same rationale as dayCol).
+      val recoveryFloor = java.sql.Date.valueOf(
+        java.time.LocalDate.ofEpochDay(minDay - recoveryLookbackDays))
+      val fallback = mirror.fold[Fallback](
+        WarehouseFallback(warehouseDir, recoveryFloor))(MirrorFallback(_))
+      val out = dag(norm, stats.getBoolean(3), state, Some(fallback),
+        maxRetries, maxHeight - collisionWindowBlocks)
+      // Strict mode (maxRetries = MaxValue) never drops, so never logs.
+      if (maxRetries != Int.MaxValue) logDropped(out.dropped)
+      // Non-strict mode skips account_changes and the access-keys
+      // registry (TROBLESHOOTING.md:104) and records which blocks it
+      // skipped them for: re-index-range's backfill gates on THIS
+      // ledger, not on inferred table presence (see the constant's
+      // note); a later strict re-index appends the skipped deltas and
+      // the compacted view converges.
+      val skipped = Seq("account_changes" -> enableAccountChanges,
+        "access_keys" -> enableAccessKeys).collect { case (t, false) => t }
+      val ledger = if (skipped.isEmpty) Seq.empty else Seq(
+        NonStrictBlocksTable -> norm.select(
           col("blockHash").as("block_hash"),
           lit(!enableAccountChanges).as("skipped_account_changes"),
           lit(!enableAccessKeys).as("skipped_access_keys")))
-      else Map.empty) ++ (if (enableEvents) {
-        def eventPk(df: DataFrame) = pkGuard(df,
-          Seq(col("emitted_for_receipt_id"),
-            col("emitted_index_of_event_entry_in_shard")),
-          Seq(col("emitted_at_block_timestamp")))
-        Map(
-          "assets__fungible_token_events" -> eventPk(Events.ftEvents(norm)),
-          "assets__non_fungible_token_events" -> eventPk(Events.nftEvents(norm)))
-      } else Map.empty)
-      // Recent-hash states (no ordering hazard anymore — states and
-      // table files become visible together at the commit point):
-      // first-seen receipt per stored hash / processed block hashes,
-      // both pruned to the trailing collision window (≥ the 500-block
-      // interruption rewind).
-      val batchPairs = txBase.select(
-        col("transaction_hash").as("tx_hash"),
-        col("t.convertedIntoReceiptId").as("cid"),
-        col("blockHeight").cast("long").as("h"))
-      val merged = txRecent.map(batchPairs.unionByName(_)).getOrElse(batchPairs)
-      writeStateV(TxRecentDir,
-        Transforms.dedupPk(merged, Seq(col("tx_hash")), Seq(col("h")))
-          .filter(col("h") >= lit(maxHeight - collisionWindowBlocks)))
-      val batchBlocks = norm.select(col("blockHash").as("block_hash"),
-        col("blockHeight").cast("long").as("h"))
-      val mergedBlocks =
-        blocksSeen.map(batchBlocks.unionByName(_)).getOrElse(batchBlocks)
-      writeStateV(BlocksRecentDir,
-        Transforms.dedupPk(mergedBlocks, Seq(col("block_hash")),
-          Seq(col("h")))
-          .filter(col("h") >= lit(maxHeight - collisionWindowBlocks)))
-
-      // Write every state and stage every table, all together and
-      // without probing for emptiness: a write that produced no rows
-      // leaves no state dir and adds no move (BatchCommit.stageBatch),
-      // so an empty table still gets no live file. Then commit
-      // atomically: manifest (the exact target file list) → moves →
-      // pointer advance.
-      val staged = BatchCommit.stageBatch(spark, warehouseDir, nextVersion,
-        stateWrites.toSeq,
-        tables.toSeq.map { case (name, df) =>
-          TimePartitioned.get(name) match {
-            case Some(ts) => (name,
-              df.withColumn("block_date", dayCol(ts)), Some("block_date"))
-            case None => (name, df, None)
-          }
-        })
-      val stagedMoves = staged.flatMap(_._2)
-      val written = staged.collect {
-        case (name, moves) if moves.nonEmpty => (name, tables(name))
-      }
-      commitHook("staged")
-      BatchCommit.writeManifest(spark, warehouseDir, nextVersion,
-        stagedMoves.map(_._2))
-      commitHook("manifest")
-      BatchCommit.applyMoves(spark, warehouseDir, stagedMoves)
-      commitHook("moved")
-      // Dual-write to the JDBC mirror when configured (S5/S7):
-      // ON CONFLICT DO NOTHING for the append-only tables, guarded
-      // upserts for the mutable registries. Idempotent by construction,
-      // so the mirror sits OUTSIDE the parquet commit protocol — a
-      // replayed batch re-issues the same statements harmlessly — and
-      // it keeps MirrorLookup's lookup side current for the lineage
-      // fallbacks.
-      mirror.foreach { f =>
-        written.filterNot(_._1.startsWith("_")).foreach { case (name, df) =>
-          name match {
-            case "accounts" => JdbcSink.write(
-              df.select("account_id", "created_by_receipt_id",
-                "deleted_by_receipt_id", "last_update_block_height"),
-              f, JdbcSink.accountsUpsertSql)
-            case "access_keys" => JdbcSink.write(
-              df.select("public_key", "account_id",
-                "created_by_receipt_id", "deleted_by_receipt_id",
-                "permission_kind", "last_update_block_height"),
-              f, JdbcSink.accessKeysUpsertSql)
-            case _ => JdbcSink.write(df, f,
-              JdbcSink.insertDoNothingSql(name, df.columns.toSeq))
-          }
-        }
-      }
-      BatchCommit.advance(spark, warehouseDir, nextVersion)
-      commitHook("committed")
-      BatchCommit.cleanup(spark, warehouseDir, nextVersion)
+      BatchCommit.commit(spark, warehouseDir, committed, out.state,
+        (out.tables -- skipped).toSeq ++ ledger, commitHook,
+        written => mirror.foreach(mirrorWrite(_, written)))
     } finally norm.unpersist()
   }
+
+  /** Non-strict drop logging (receipts.rs:93-104 parity): the reference
+    * warns per skipped receipt with its id and context before moving
+    * on; mirror that — id, retry budget, and the receipt's block
+    * timestamp (its age) — capped at 100 lines per batch so a poisoned
+    * feed can't flood the log.
+    */
+  private def logDropped(dropped: DataFrame): Unit = {
+    val sample = dropped
+      .select(col("r.receiptId"), col("blockTimestamp"), col("retries"))
+      .limit(100).collect()
+    if (sample.nonEmpty) {
+      val total = if (sample.length < 100) sample.length.toLong
+                  else dropped.count()
+      Metrics.recordPendingDropped(total)
+      sample.foreach { r =>
+        System.err.println(s"[graft-stream] dropping receipt " +
+          s"${r.getString(0)} after ${r.getInt(2)} retry batches " +
+          s"(block_timestamp=${r.get(1)}): parent transaction never " +
+          "resolved — non-strict mode skips it (receipts.rs:93-104)")
+      }
+      if (total > sample.length)
+        System.err.println(s"[graft-stream] ... and " +
+          s"${total - sample.length} more dropped receipts this batch")
+    }
+  }
+
+  /** Dual-write to the JDBC mirror (S5/S7): ON CONFLICT DO NOTHING for
+    * the append-only tables, guarded upserts for the mutable
+    * registries. Idempotent by construction, so the mirror sits
+    * OUTSIDE the parquet commit protocol — a replayed batch re-issues
+    * the same statements harmlessly — and it keeps MirrorLookup's
+    * lookup side current for the lineage fallbacks.
+    */
+  private def mirrorWrite(f: JdbcSink.ConnectionFactory,
+      written: Seq[(String, DataFrame)]): Unit =
+    written.filterNot(_._1.startsWith("_")).foreach { case (name, df) =>
+      name match {
+        case "accounts" => JdbcSink.write(
+          df.select("account_id", "created_by_receipt_id",
+            "deleted_by_receipt_id", "last_update_block_height"),
+          f, JdbcSink.accountsUpsertSql)
+        case "access_keys" => JdbcSink.write(
+          df.select("public_key", "account_id",
+            "created_by_receipt_id", "deleted_by_receipt_id",
+            "permission_kind", "last_update_block_height"),
+          f, JdbcSink.accessKeysUpsertSql)
+        case _ => JdbcSink.write(df, f,
+          JdbcSink.insertDoNothingSql(name, df.columns.toSeq))
+      }
+    }
 }
 
 /** Read-side helpers over the streaming warehouse. */

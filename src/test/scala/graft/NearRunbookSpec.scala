@@ -259,6 +259,45 @@ class NearRunbookSpec extends AnyFunSuite {
       "backfilled access-keys view diverged from the healthy run")
   }
 
+  test("runbook: a repair commit carries every state table; an emptied state stays absent") {
+    // The backfill commits a version of its own, so every state table
+    // the last batch left must reach that version unchanged — all of
+    // them, not a hand-kept list of names.
+    val root = Files.createTempDirectory("graft_runbook_carry").toString
+    val input = s"$root/input"; val wh = s"$root/wh"
+    val chain = graft.near.Fixtures.chain
+    Files.createDirectories(Paths.get(input))
+    Files.write(Paths.get(input, "b100.json"), chain(0).getBytes("UTF-8"))
+    def version = graft.near.BatchCommit.currentVersion(spark, wh)
+    val states = Seq(Stream.PendingDir, Stream.PendingEdgesDir,
+      Stream.LineageAheadDir, Stream.TxRecentDir, Stream.BlocksRecentDir)
+    def snapshot(): Map[String, Option[Seq[String]]] =
+      states.map(n => n -> Stream.stateTable(spark, wh, n).map(rowSet)).toMap
+    Stream.processBatch(spark, Ingest.blocksFromJson(spark, chain.take(1))
+      .toDF(), wh, enableAccessKeys = false)
+    val before = snapshot()
+    assert(before(Stream.LineageAheadDir).exists(_.nonEmpty),
+      "fixture carries no _lineage_ahead rows")
+    Runbook.reindexRange(spark, input, wh, 100L, 100L)
+    assert(version == 2L, s"the backfill committed no version of its own")
+    val after = snapshot()
+    states.foreach { n =>
+      assert(after(n) == before(n), s"state $n changed across the repair " +
+        s"commit: ${before(n).map(_.size)} -> ${after(n).map(_.size)} rows")
+    }
+    // R6 parks under a 1-retry budget, then drops: the batch that
+    // empties `_pending` must not get the old version's rows back.
+    Stream.processBatch(spark, Ingest.blocksFromJson(spark, chain.slice(1, 2))
+      .toDF(), wh, maxRetries = 1)
+    assert(Stream.stateTable(spark, wh, Stream.PendingDir).exists(
+      _.count() > 0), "R6 did not park")
+    Stream.processBatch(spark, Ingest.blocksFromJson(spark, chain.slice(2, 3))
+      .toDF(), wh, maxRetries = 1)
+    val pendingDir = Paths.get(graft.near.BatchCommit.statePath(wh, version,
+      Stream.PendingDir))
+    assert(!Files.exists(pendingDir), s"an emptied _pending left $pendingDir")
+  }
+
   test("runbook: malformed invocations fail loudly with usage") {
     Seq(
       Array("frobnicate"),

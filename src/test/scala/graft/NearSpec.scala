@@ -220,14 +220,17 @@ class NearSpec extends AnyFunSuite {
   }
 
   test("allTables localCheckpoint contract: lost blocks fail LOUDLY") {
-    // Ingest.scala documents that the eager localCheckpoint bases do
-    // not survive executor loss — acceptable for a per-microbatch /
+    // Stream.dag documents that the localCheckpoint bases do not
+    // survive executor loss — acceptable for a per-microbatch /
     // bench lifetime ONLY because a lost block surfaces as a hard
     // error instead of a silent recompute that could resolve lineage
     // against a half-rebuilt base. Simulate the loss (unpersisting a
     // local checkpoint destroys its only copy, exactly like losing
     // the executor that held it) and require the read to THROW, with
-    // the checkpoint-block message, not return rows.
+    // the checkpoint-block message, not return rows. The bases are
+    // checkpointed lazily, by the first job that reads them, so the
+    // read goes to transaction_actions: its base (txBase) is the one
+    // the transactions count above checkpointed.
     val sc = spark.sparkContext
     val norm = Ingest.blocksFromJson(spark, Fixtures.chain).toDF().persist()
     norm.count()
@@ -238,7 +241,7 @@ class NearSpec extends AnyFunSuite {
       sc.getPersistentRDDs.get(id).foreach(_.unpersist(true))
     }
     val err = intercept[Throwable] {
-      tables("execution_outcomes").count()
+      tables("transaction_actions").count()
     }
     def chain(t: Throwable): Seq[Throwable] =
       if (t == null) Seq.empty else t +: chain(t.getCause)
