@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * lookups — parquet min/max + bloom skip at scale) or an account id +
   * the canonical time-ordering columns; time-range variants prune the
   * warehouse's `block_date` partitions before touching data. Keyset
-  * pagination (`afterTs`) replaces OFFSET so deep pages stay O(page).
+  * pagination (`after`) replaces OFFSET so deep pages stay O(page).
   */
 object ConsumerQueries {
 
@@ -20,11 +20,6 @@ object ConsumerQueries {
   def transactionByHash(transactions: DataFrame, hash: String): DataFrame =
     transactions.filter(col("transaction_hash") === hash)
 
-  /** Account activity: transactions signed by an account, in the
-    * canonical pagination order (transactions_signer_account_id_idx +
-    * the 2021-08-02 sorting index (block_timestamp, index_in_chunk)).
-    * `afterTs` is the keyset cursor (exclusive).
-    */
   /** Composite keyset cursor: strictly after (ts, index) — a cursor on
     * the timestamp alone would skip same-timestamp rows beyond a page
     * boundary (whole blocks share one timestamp).
@@ -35,6 +30,12 @@ object ConsumerQueries {
       ts > lit(t.bigDecimal) || (ts === lit(t.bigDecimal) && idx > i)
     }.getOrElse(lit(true))
 
+  /** Account activity: transactions signed by an account, in the
+    * canonical pagination order (transactions_signer_account_id_idx +
+    * the 2021-08-02 sorting index (block_timestamp, index_in_chunk)).
+    * `after` is the keyset cursor (exclusive): the (block_timestamp,
+    * index_in_chunk) of the last row of the previous page.
+    */
   def transactionsBySigner(transactions: DataFrame, signer: String,
       after: Option[(BigDecimal, Int)] = None, limit: Int = 100): DataFrame =
     transactions.filter(col("signer_account_id") === signer &&

@@ -1,8 +1,8 @@
 package graft.near
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
 
 /** The aggregated query surface: the `aggregated__lockups` view
   * (SURVEY J4/J5), the block lookups (A1/A2), and the daily
@@ -15,44 +15,56 @@ object Views {
 
   /** aggregated__lockups (2021-08-04-151515.../up.sql:22-31):
     * accounts ⟕ receipts ⟕ blocks ⟕ receipts ⟕ blocks on lockup
-    * accounts. The probe sides (receipts of the handful of lockup
-    * accounts) are tiny relative to blocks at scale, but all four
-    * joins key on high-cardinality hashes — the lockup filter runs
-    * FIRST so only `%.lockup.near` accounts shuffle; Catalyst then
-    * broadcast-joins the filtered side.
+    * accounts, i.e. each `%.lockup.near` account with the heights of
+    * the blocks that included its creation and deletion receipts.
+    *
+    * The lifecycle is resolved once, on the driver: one scan of the
+    * lockup accounts, one `receipt_id IN (…)` scan of `receipts`, one
+    * `block_hash IN (…)` scan of `blocks` (each skipped when its key
+    * list is empty), then the outer joins over the collected rows. The
+    * result is a local relation, so a caller's plan over it never
+    * re-derives `accounts` (a `Warehouse.accountsCurrent` aggregate
+    * over the stream's deltas). Bound: the lockup accounts and their
+    * lifecycle rows are held on the driver — the reference holds the
+    * same set in memory while it walks it over RPC (main.rs:160-236).
+    * The scans run when the view is built, not when it is read.
     */
   def aggregatedLockups(accounts: DataFrame, receipts: DataFrame,
       blocks: DataFrame): DataFrame = {
     val lockups = accounts.filter(col("account_id").endsWith(".lockup.near"))
-    // receipts/blocks are the biggest warehouse tables — never
-    // broadcast them whole. Semi-join each down to the handful of
-    // lockup lifecycle receipt ids first (the tiny id set broadcasts),
-    // then the FILTERED side is small enough to broadcast into the
-    // left-outer joins.
-    def lifecycleReceipts(idCol: String, outId: String, outBlock: String) =
-      receipts
-        .join(broadcast(lockups.select(col(idCol).as("want"))
-          .filter(col("want").isNotNull).distinct()),
-          col("receipt_id") === col("want"), "left_semi")
-        .select(col("receipt_id").as(outId),
-          col("included_in_block_hash").as(outBlock))
-    val rStart = lifecycleReceipts("created_by_receipt_id", "rs_id", "rs_block")
-    val rEnd = lifecycleReceipts("deleted_by_receipt_id", "re_id", "re_block")
-    def blockHeights(blockCol: String, outHash: String, outHeight: String,
-        src: DataFrame) =
-      blocks
-        .join(broadcast(src.select(col(blockCol).as("want")).distinct()),
-          col("block_hash") === col("want"), "left_semi")
-        .select(col("block_hash").as(outHash), col("block_height").as(outHeight))
-    val bStart = blockHeights("rs_block", "bs_hash", "creation_block_height", rStart)
-    val bEnd = blockHeights("re_block", "be_hash", "deletion_block_height", rEnd)
-    lockups
-      .join(broadcast(rStart), col("created_by_receipt_id") === col("rs_id"), "left")
-      .join(broadcast(bStart), col("rs_block") === col("bs_hash"), "left")
-      .join(broadcast(rEnd), col("deleted_by_receipt_id") === col("re_id"), "left")
-      .join(broadcast(bEnd), col("re_block") === col("be_hash"), "left")
-      .select(col("account_id"), col("creation_block_height"),
-        col("deletion_block_height"))
+      .select(col("account_id"), col("created_by_receipt_id"),
+        col("deleted_by_receipt_id"))
+      .collect()
+    // key -> every value row of `df` with that key (duplicates kept, so
+    // the outer joins below keep SQL's multiplicity)
+    def lookup(df: DataFrame, key: String, value: String,
+        keys: Seq[String]): Map[String, Seq[Any]] =
+      if (keys.isEmpty) Map.empty
+      else df.filter(col(key).isin(keys: _*)).select(col(key), col(value))
+        .collect().toSeq.groupBy(_.getString(0))
+        .map { case (k, rows) => k -> rows.map(_.get(1)) }
+    val receiptIds = lockups.toSeq
+      .flatMap(r => Seq(r.getString(1), r.getString(2))).filter(_ != null).distinct
+    val blockOf = lookup(receipts, "receipt_id", "included_in_block_hash", receiptIds)
+    val heightOf = lookup(blocks, "block_hash", "block_height",
+      blockOf.values.flatten.collect { case h: String => h }.toSeq.distinct)
+    // left-outer semantics: no match yields one NULL
+    def outer(key: Any, m: Map[String, Seq[Any]]): Seq[Any] = key match {
+      case k: String => m.getOrElse(k, Seq(null))
+      case _ => Seq(null)
+    }
+    def heights(receiptId: String): Seq[Any] =
+      outer(receiptId, blockOf).flatMap(outer(_, heightOf))
+    val rows = lockups.toSeq.flatMap { r =>
+      for (c <- heights(r.getString(1)); d <- heights(r.getString(2)))
+        yield Row(r.getString(0), c, d)
+    }
+    val heightType = blocks.schema("block_height").dataType
+    val schema = StructType(Seq(accounts.schema("account_id"),
+      StructField("creation_block_height", heightType),
+      StructField("deletion_block_height", heightType)))
+    accounts.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** J5: lockup accounts live at `blockHeight`
@@ -61,12 +73,13 @@ object Views {
     */
   def lockupAccountIdsAtHeight(lockupsView: DataFrame,
       blockHeight: Long): DataFrame =
-    lockupsView.filter(
-        (col("creation_block_height").isNull ||
-          col("creation_block_height") <= blockHeight) &&
-        (col("deletion_block_height").isNull ||
-          col("deletion_block_height") >= blockHeight))
-      .select(col("account_id"))
+    lockupsView.filter(liveAt(lit(blockHeight))).select(col("account_id"))
+
+  private def liveAt(height: Column): Column =
+    (col("creation_block_height").isNull ||
+      col("creation_block_height") <= height) &&
+    (col("deletion_block_height").isNull ||
+      col("deletion_block_height") >= height)
 
   /** A1: latest block height (blocks.rs:29-40). */
   def latestBlockHeight(blocks: DataFrame): DataFrame =
@@ -175,13 +188,17 @@ object Views {
     * LAST block (ties broken height desc then hash asc — same-height
     * forks share (timestamp, height)).
     *
-    * Scale shape: the day pick is one window over blocks partitioned
-    * by day (rows per day are bounded — ~70k on mainnet — so no
-    * skew risk); the per-day lockup set is a broadcast theta-join of
-    * the tiny day table (≤ days-since-genesis rows) against the
-    * lockups view; and the U256 locked-amount math runs distributed
-    * per (lockup, day) pair — no per-day driver loop, so a
-    * years-long backfill is a single job.
+    * Plan: one window over blocks partitioned by day picks the day's
+    * block (rows per day are bounded — ~70k on mainnet — so no skew
+    * risk); it is left-joined to the (lockup ⋈ state) rows live at that
+    * block's height, a broadcast theta-join against the small lockup
+    * side (`aggregatedLockups` is a local relation); the U256
+    * locked-amount math runs distributed as a typed map per (day,
+    * lockup) pair and carries the day's block fields, so one aggregate
+    * per day yields the row — no join back to the day table. A day
+    * with no live lockup keeps its row with zero locked tokens. The
+    * series is small (≤ days since genesis) and is sorted in one
+    * partition. Driver bound: the lockups view, as above.
     */
   def dailyCirculatingSupply(spark: SparkSession, blocks: DataFrame,
       lockupsView: DataFrame, states: Dataset[Lockup.State],
@@ -196,52 +213,49 @@ object Views {
           .orderBy(col("block_timestamp").desc, col("block_height").desc,
             col("block_hash").asc)))
       .filter(col("rn") === 1)
-      .select(col("day_ns"), col("block_hash"),
+      .select(col("block_hash"),
         col("block_height").cast("long").as("day_block_height"),
-        col("block_timestamp"), col("total_supply"))
+        col("block_timestamp").cast("long").as("bts"),
+        // a string through the typed map: its BigDecimal encoder is
+        // DECIMAL(38,18), too narrow for a u128 supply
+        col("total_supply").cast(D38).cast("string").as("total"))
 
-    val live = lockupsView.join(
-        broadcast(dayBlk.select(col("day_ns").cast("long").as("day"),
-          col("day_block_height"),
-          col("block_timestamp").cast("long").as("bts"))),
-        (col("creation_block_height").isNull ||
-          col("creation_block_height") <= col("day_block_height")) &&
-        (col("deletion_block_height").isNull ||
-          col("deletion_block_height") >= col("day_block_height")))
-      .select(col("day"), col("account_id"), col("bts"))
-
-    val locked = states
-      .join(live, states("accountId") === live("account_id"))
-      .select(col("day"), col("bts"),
+    val lockupStates = lockupsView
+      .join(states, lockupsView("account_id") === states("accountId"))
+      .select(col("creation_block_height"), col("deletion_block_height"),
         struct(states.columns.toIndexedSeq.map(states(_)): _*).as("s"))
-      .as[(Long, Long, Lockup.State)]
-      .map { case (day, bts, s) => (day, Lockup.lockedAmount(s, bts).toString) }
-      .toDF("day", "locked")
-      .select(col("day"), col("locked").cast(D38).as("locked"))
 
-    val agg = locked.groupBy(col("day"))
-      .agg(sum(col("locked")).cast(D38).as("lockups_locked"),
-        count(lit(1)).cast("int").as("total_lockups"),
-        count(when(col("locked") > 0, 1)).cast("int").as("unfinished_lockups"))
+    val locked = dayBlk
+      .join(broadcast(lockupStates), liveAt(col("day_block_height")), "left")
+      .select(col("block_hash"), col("bts"), col("total"), col("s"))
+      .as[(String, Long, String, Option[Lockup.State])]
+      .map { case (hash, bts, total, s) =>
+        (hash, bts, total, s.map(Lockup.lockedAmount(_, bts).toString)) }
+      .toDF("block_hash", "bts", "total", "locked")
+      .withColumn("locked", col("locked").cast(D38))
 
     val f = lit(new java.math.BigDecimal(foundationLockedTokens.bigInteger))
       .cast(D38)
-    dayBlk.join(agg, dayBlk("day_ns").cast("long") === agg("day"), "left")
-      .select(
-        col("block_timestamp").cast(D20).as("computed_at_block_timestamp"),
-        col("block_hash").as("computed_at_block_hash"),
-        (col("total_supply").cast(D38) - f -
-          coalesce(col("lockups_locked"), lit(0).cast(D38))).cast(D38)
+    val lockupsLocked = coalesce(sum(col("locked")), lit(0).cast(D38)).cast(D38)
+    locked.groupBy(col("block_hash"), col("bts"), col("total"))
+      .agg(
+        (col("total").cast(D38) - f - lockupsLocked).cast(D38)
           .as("circulating_tokens_supply"),
-        col("total_supply").cast(D38).as("total_tokens_supply"),
-        coalesce(col("total_lockups"), lit(0)).cast("int")
-          .as("total_lockup_contracts_count"),
-        coalesce(col("unfinished_lockups"), lit(0)).cast("int")
+        count(col("locked")).cast("int").as("total_lockup_contracts_count"),
+        count(when(col("locked") > 0, 1)).cast("int")
           .as("unfinished_lockup_contracts_count"),
+        lockupsLocked.as("lockups_locked_tokens"))
+      .select(
+        col("bts").cast(D20).as("computed_at_block_timestamp"),
+        col("block_hash").as("computed_at_block_hash"),
+        col("circulating_tokens_supply"),
+        col("total").cast(D38).as("total_tokens_supply"),
+        col("total_lockup_contracts_count"),
+        col("unfinished_lockup_contracts_count"),
         f.as("foundation_locked_tokens"),
-        coalesce(col("lockups_locked"), lit(0).cast(D38)).cast(D38)
-          .as("lockups_locked_tokens"))
-      .orderBy(col("computed_at_block_timestamp"))
+        col("lockups_locked_tokens"))
+      .coalesce(1)
+      .sortWithinPartitions(col("computed_at_block_timestamp"))
   }
 
   /** Nanosecond start-of-day bucketing (main.rs:112-114):

@@ -1,14 +1,18 @@
 package graft
 
 import java.math.BigInteger
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
-import graft.near.{Fixtures, Ingest, Lockup, Views}
+import graft.near.{Fixtures, Ingest, Lockup, ScaleChain, Views}
 
 /** Golden tests for the lockup math (lockup.rs:104-196), the
   * aggregated__lockups view (J4/J5), the block lookups (A1/A2), and
-  * the circulating-supply job (A3).
+  * the circulating-supply job (A3), and the equivalence of the
+  * driver-resolved lockup view and the one-aggregate daily series with
+  * the broadcast-join plans they replaced ([[NearSupplySpec.Reference]]).
   */
 class NearSupplySpec extends AnyFunSuite {
   import SparkTestSession._
@@ -158,5 +162,231 @@ class NearSupplySpec extends AnyFunSuite {
       BigInt("1699920000000000000"))
     assert(Views.startOfDayNs(BigInt("1699920000000000000")) ==
       BigInt("1699920000000000000"))
+  }
+
+  // ------------------------------------------------------------------
+  // Equivalence with the broadcast-join plans, over the ScaleChain
+  // (same-height forks included), plus the job-count guard.
+
+  import NearSupplySpec._
+
+  private lazy val scaleTables: Map[Long, Map[String, DataFrame]] =
+    Seq(1L, 2L, 3L).map { seed =>
+      seed -> Ingest.allTables(Ingest.blocksFromJson(spark,
+          ScaleChain.chain(seed, 256)).toDF())
+        .filter { case (k, _) => Set("accounts", "receipts", "blocks")(k) }
+        .map { case (k, v) => k -> v.cache() }
+    }.toMap
+
+  private def states: Dataset[Lockup.State] = {
+    import spark.implicits._
+    spark.createDataset(ScaleChain.lockupStates)
+  }
+
+  private def newView(t: Map[String, DataFrame]) =
+    Views.aggregatedLockups(t("accounts"), t("receipts"), t("blocks"))
+  private def refView(t: Map[String, DataFrame]) =
+    Reference.aggregatedLockups(t("accounts"), t("receipts"), t("blocks"))
+
+  private def newSeries(t: Map[String, DataFrame], v: DataFrame,
+      st: Dataset[Lockup.State]) =
+    Views.dailyCirculatingSupply(spark, t("blocks"), v, st,
+      Fixtures.foundationLocked)
+  private def refSeries(t: Map[String, DataFrame], v: DataFrame,
+      st: Dataset[Lockup.State]) =
+    Reference.dailyCirculatingSupply(spark, t("blocks"), v, st,
+      Fixtures.foundationLocked)
+
+  /** Same schema and the same rows as multisets. */
+  private def assertSameRows(got: DataFrame, want: DataFrame,
+      what: String): Seq[org.apache.spark.sql.Row] = {
+    assert(got.schema.map(f => (f.name, f.dataType)) ==
+      want.schema.map(f => (f.name, f.dataType)), s"$what: schema")
+    val g = got.collect().toSeq
+    val w = want.collect().toSeq
+    def bag(rows: Seq[org.apache.spark.sql.Row]) =
+      rows.groupBy(_.toSeq).map { case (k, v) => k -> v.size }
+    assert(bag(g) == bag(w), s"$what:\n got  ${g.mkString("\n      ")}" +
+      s"\n want ${w.mkString("\n      ")}")
+    g
+  }
+
+  test("lockup view and daily series equal the broadcast-join plans (seeds 1-3)") {
+    Seq(1L, 2L, 3L).foreach { seed =>
+      val t = scaleTables(seed)
+      val v = assertSameRows(newView(t), refView(t), s"view, seed $seed")
+      assert(v.size == 6, s"seed $seed: ${v.size} lockups")
+      assert(v.exists(_.get(2) != null), s"seed $seed: no deleted lockup")
+      val days = assertSameRows(newSeries(t, newView(t), states),
+        refSeries(t, refView(t), states), s"series, seed $seed")
+      assert(days.size > 20, s"seed $seed: ${days.size} days")
+      assert(days.map(_.getAs[Int]("total_lockup_contracts_count")).toSet.size > 2)
+      // sorted by the day's block timestamp
+      val ts = days.map(_.getAs[java.math.BigDecimal]("computed_at_block_timestamp"))
+      assert(ts == ts.sortWith(_.compareTo(_) < 0))
+    }
+  }
+
+  test("lockup view edge cases: no lockup account, no state, no deletion receipt") {
+    val t = scaleTables(1L)
+    // no `.lockup.near` account: empty IN lists, no failure, zero-lockup days
+    val none = t + ("accounts" ->
+      t("accounts").filter(!col("account_id").endsWith(".lockup.near")))
+    assert(assertSameRows(newView(none), refView(none), "no lockups").isEmpty)
+    val zero = assertSameRows(newSeries(none, newView(none), states),
+      refSeries(none, refView(none), states), "series, no lockups")
+    assert(zero.nonEmpty &&
+      zero.forall(_.getAs[Int]("total_lockup_contracts_count") == 0))
+    // a live lockup with no state row
+    val fewer = states.filter(col("accountId") =!= "fund0.lockup.near")
+    assertSameRows(newSeries(t, newView(t), fewer),
+      refSeries(t, refView(t), fewer), "series, lockup without state")
+    // a lockup whose deletion receipt is not in `receipts`
+    val deletions = t("accounts").filter(col("account_id").endsWith(".lockup.near") &&
+      col("deleted_by_receipt_id").isNotNull).select("deleted_by_receipt_id")
+      .collect().map(_.getString(0)).toSeq
+    assert(deletions.nonEmpty)
+    val lost = t + ("receipts" ->
+      t("receipts").filter(!col("receipt_id").isin(deletions: _*)))
+    val lv = assertSameRows(newView(lost), refView(lost), "view, lost deletion")
+    assert(lv.forall(_.get(2) == null))
+    assertSameRows(newSeries(lost, newView(lost), states),
+      refSeries(lost, refView(lost), states), "series, lost deletion")
+  }
+
+  test("daily series over the lockup view runs in at most 8 Spark jobs") {
+    // 3 for the view (accounts, receipts IN, blocks IN), 5 for the
+    // series; the broadcast-join plans ran 26 (17 for the view)
+    val t = scaleTables(1L)
+    refSeries(t, refView(t), states).collect() // caches materialised
+    val jobs = countJobs(spark) {
+      newSeries(t, newView(t), states).collect()
+    }
+    assert(jobs <= 8, s"$jobs Spark jobs")
+  }
+}
+
+object NearSupplySpec {
+
+  /** Jobs started while `body` runs on this thread (broadcasts and
+    * adaptive stages included: they inherit the thread's properties).
+    */
+  def countJobs(spark: SparkSession)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.jobs") == tag))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      org.apache.spark.graft.ListenerSync.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get()
+  }
+
+  /** The lockup view and daily series as four broadcast semi-joins and
+    * a theta-join + re-join: the plans `Views` ran before the lifecycle
+    * was resolved on the driver, kept as the equivalence reference.
+    */
+  object Reference {
+    private val D20 = DecimalType(20, 0)
+    private val D38 = DecimalType(38, 0)
+
+    def aggregatedLockups(accounts: DataFrame, receipts: DataFrame,
+        blocks: DataFrame): DataFrame = {
+      val lockups = accounts.filter(col("account_id").endsWith(".lockup.near"))
+      def lifecycleReceipts(idCol: String, outId: String, outBlock: String) =
+        receipts
+          .join(broadcast(lockups.select(col(idCol).as("want"))
+            .filter(col("want").isNotNull).distinct()),
+            col("receipt_id") === col("want"), "left_semi")
+          .select(col("receipt_id").as(outId),
+            col("included_in_block_hash").as(outBlock))
+      val rStart = lifecycleReceipts("created_by_receipt_id", "rs_id", "rs_block")
+      val rEnd = lifecycleReceipts("deleted_by_receipt_id", "re_id", "re_block")
+      def blockHeights(blockCol: String, outHash: String, outHeight: String,
+          src: DataFrame) =
+        blocks
+          .join(broadcast(src.select(col(blockCol).as("want")).distinct()),
+            col("block_hash") === col("want"), "left_semi")
+          .select(col("block_hash").as(outHash), col("block_height").as(outHeight))
+      val bStart = blockHeights("rs_block", "bs_hash", "creation_block_height", rStart)
+      val bEnd = blockHeights("re_block", "be_hash", "deletion_block_height", rEnd)
+      lockups
+        .join(broadcast(rStart), col("created_by_receipt_id") === col("rs_id"), "left")
+        .join(broadcast(bStart), col("rs_block") === col("bs_hash"), "left")
+        .join(broadcast(rEnd), col("deleted_by_receipt_id") === col("re_id"), "left")
+        .join(broadcast(bEnd), col("re_block") === col("be_hash"), "left")
+        .select(col("account_id"), col("creation_block_height"),
+          col("deletion_block_height"))
+    }
+
+    def dailyCirculatingSupply(spark: SparkSession, blocks: DataFrame,
+        lockupsView: DataFrame, states: Dataset[Lockup.State],
+        foundationLockedTokens: BigInt): DataFrame = {
+      import spark.implicits._
+      val dayBlk = blocks
+        .withColumn("day_ns",
+          (col("block_timestamp") - (col("block_timestamp") % lit(86400000000000L)))
+            .cast(D20))
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("day_ns"))
+            .orderBy(col("block_timestamp").desc, col("block_height").desc,
+              col("block_hash").asc)))
+        .filter(col("rn") === 1)
+        .select(col("day_ns"), col("block_hash"),
+          col("block_height").cast("long").as("day_block_height"),
+          col("block_timestamp"), col("total_supply"))
+
+      val live = lockupsView.join(
+          broadcast(dayBlk.select(col("day_ns").cast("long").as("day"),
+            col("day_block_height"),
+            col("block_timestamp").cast("long").as("bts"))),
+          (col("creation_block_height").isNull ||
+            col("creation_block_height") <= col("day_block_height")) &&
+          (col("deletion_block_height").isNull ||
+            col("deletion_block_height") >= col("day_block_height")))
+        .select(col("day"), col("account_id"), col("bts"))
+
+      val locked = states
+        .join(live, states("accountId") === live("account_id"))
+        .select(col("day"), col("bts"),
+          struct(states.columns.toIndexedSeq.map(states(_)): _*).as("s"))
+        .as[(Long, Long, Lockup.State)]
+        .map { case (day, bts, s) => (day, Lockup.lockedAmount(s, bts).toString) }
+        .toDF("day", "locked")
+        .select(col("day"), col("locked").cast(D38).as("locked"))
+
+      val agg = locked.groupBy(col("day"))
+        .agg(sum(col("locked")).cast(D38).as("lockups_locked"),
+          count(lit(1)).cast("int").as("total_lockups"),
+          count(when(col("locked") > 0, 1)).cast("int").as("unfinished_lockups"))
+
+      val f = lit(new java.math.BigDecimal(foundationLockedTokens.bigInteger))
+        .cast(D38)
+      dayBlk.join(agg, dayBlk("day_ns").cast("long") === agg("day"), "left")
+        .select(
+          col("block_timestamp").cast(D20).as("computed_at_block_timestamp"),
+          col("block_hash").as("computed_at_block_hash"),
+          (col("total_supply").cast(D38) - f -
+            coalesce(col("lockups_locked"), lit(0).cast(D38))).cast(D38)
+            .as("circulating_tokens_supply"),
+          col("total_supply").cast(D38).as("total_tokens_supply"),
+          coalesce(col("total_lockups"), lit(0)).cast("int")
+            .as("total_lockup_contracts_count"),
+          coalesce(col("unfinished_lockups"), lit(0)).cast("int")
+            .as("unfinished_lockup_contracts_count"),
+          f.as("foundation_locked_tokens"),
+          coalesce(col("lockups_locked"), lit(0).cast(D38)).cast(D38)
+            .as("lockups_locked_tokens"))
+        .orderBy(col("computed_at_block_timestamp"))
+    }
   }
 }
