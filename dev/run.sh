@@ -1,7 +1,8 @@
 #!/bin/bash
-# Direct-JVM runner for graft mains (QBench/Verify/Bench) — same
-# add-opens set as build.sbt, bypasses sbt so parallel measurement
-# runs don't contend on the project lock.
+# Direct-JVM runner for graft mains (e.g. `dev/run.sh graft.Verify
+# <sfDir> <outDir>`) — same add-opens set as build.sbt, bypasses sbt so
+# parallel runs don't contend on the project lock. Run `sbt compile`
+# first: the classpath is sbt's class output.
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do

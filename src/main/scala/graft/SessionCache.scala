@@ -6,12 +6,11 @@ import org.apache.spark.sql.SparkSession
   *
   * A bare `ConcurrentHashMap[SparkSession, V]` retains every stopped
   * session (and whatever the value pins — persisted fixture DFs, their
-  * cached blocks' metadata) for the life of the JVM; across a bench
-  * run's dozens of short-lived isolated sessions that is an unbounded
-  * leak shape even when each value is small. This wrapper sweeps
-  * entries whose session's SparkContext is stopped on EVERY access, so
-  * at most the live sessions' values are retained and the steady state
-  * after a fork-per-entry bench loop is a single entry.
+  * cached blocks' metadata) for the life of the JVM; across many
+  * short-lived sessions that is an unbounded leak shape even when each
+  * value is small. This wrapper sweeps entries whose session's
+  * SparkContext is stopped on EVERY access, so at most the live
+  * sessions' values are retained.
   *
   * Sweep-then-compute keeps the hot path cheap: the sweep is O(live +
   * stopped) over a map that in practice holds 1–2 entries, and
@@ -25,17 +24,5 @@ final class SessionCache[V] {
     val it = m.keySet().iterator()
     while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
     m.computeIfAbsent(s, (s2: SparkSession) => f(s2))
-  }
-
-  /** Drop (and return) the entry for `s`, if any — for callers that
-    * release a session's value explicitly before the session stops.
-    */
-  def remove(s: SparkSession): Option[V] = Option(m.remove(s))
-
-  /** Live entry count (after a sweep) — exposed for the leak spec. */
-  def size: Int = {
-    val it = m.keySet().iterator()
-    while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
-    m.size()
   }
 }

@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import graft.queries.{NearOracles, NearQueries}
+/** Correctness dump for the independent DuckDB oracle: each
+  * [[NearQueries.queries]] result → parquet, plus `oracle_sql.json`
+  * ([[NearOracles.sql]]), for `dev/compare.py`.
+  * Usage: `graft.Verify <sfDir> <outDir>`.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -15,18 +19,13 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated prefixes); driver sets none.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY").map(_.split(",").toSeq)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith)) }
-    // Registry-completeness gate (VERDICT r14 #2): a failed or skipped
-    // entry must be LOUD, not a silently absent correctness row. Each
-    // entry gets one retry (a transient first-run stage race must not
-    // cost the row), failures are summarized on stderr AND written to
-    // `_verify_failures.json` so any non-green dump is visible in the
-    // round artifacts even when the exit code is ignored.
+    // A failed entry must be LOUD, not a silently absent correctness
+    // row. Each entry gets one retry (a transient first-run stage race
+    // must not cost the row); failures are summarized on stderr AND
+    // written to `_verify_failures.json`, so a non-green dump is visible
+    // even when the exit code is ignored.
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    selected.foreach { case (name, fn) =>
+    NearQueries.queries.foreach { case (name, fn) =>
       def attempt(): Unit = fn(spark, sfDir).coalesce(1).write
         .mode("overwrite").parquet(s"$outDir/$name")
       try attempt()
@@ -51,7 +50,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = NearOracles.sql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (failures.nonEmpty) {
@@ -59,7 +58,7 @@ object Verify {
         .mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/_verify_failures.json"), fj)
       System.err.println(
-        s"[verify] ${failures.size}/${selected.size} entries FAILED: " +
+        s"[verify] ${failures.size}/${NearQueries.queries.size} entries FAILED: " +
           failures.keys.mkString(", "))
     }
     // Exit 0 even on failure: the driver must still get the green

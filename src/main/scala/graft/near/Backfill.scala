@@ -53,7 +53,7 @@ object Backfill {
     actions.withColumn("args",
       when(col("action_kind") === "FUNCTION_CALL" &&
           col("receipt_receiver_account_id") =!= "client.bridge.near",
-        graft.expressions.Strings.embedArgsJson(s, col("args")))
+        Strings.embedArgsJson(s, col("args")))
         .otherwise(col("args")))
   }
 }

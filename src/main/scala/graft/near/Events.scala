@@ -36,7 +36,7 @@ object Events {
     * active session.
     */
   private def esc(c: Column): Column =
-    graft.expressions.Strings.escapeDefault(
+    Strings.escapeDefault(
       org.apache.spark.sql.SparkSession.active, coalesce(c, lit("")))
 
   /** Parsed EVENT_JSON logs joined with their outcome context: one row

@@ -7,9 +7,9 @@ package graft.near
   * placeholder, FT/NFT events with ordinals + malformed logs, the
   * issue84 hash collision, and a same-height fork.
   *
-  * Used by both the ScalaTest golden specs and the driver-facing
-  * `near_*` queries (SparkEntry), so the gate exercises the real ETL
-  * DAG end-to-end.
+  * Used by both the ScalaTest golden specs and the `near_*` oracle
+  * queries (`graft.queries.NearQueries`), so the gate exercises the
+  * real ETL DAG end-to-end.
   */
 object Fixtures {
 

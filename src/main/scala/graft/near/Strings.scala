@@ -1,4 +1,4 @@
-package graft.expressions
+package graft.near
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native string expressions — same rationale as [[Sketches]]: one
-  * virtual call per row beats a Scala UDF's encoder round-trip, and the
-  * function stays inside the Catalyst plan (pushdown/pruning survive).
+/** Native string expressions: one virtual call per row beats a Scala
+  * UDF's encoder round-trip, and the function stays inside the
+  * Catalyst plan (pushdown/pruning survive).
   */
 object Strings {
 

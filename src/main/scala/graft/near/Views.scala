@@ -96,6 +96,15 @@ object Views {
         col("block_hash").asc)
       .limit(1)
 
+  /** `df` evaluated once, as a local relation: the callers below read
+    * the A2 block twice (its timestamp or height, then its fields in
+    * [[circulatingSupply]]), and a lazy `df` would run the top-1 sort
+    * over `blocks` each time.
+    */
+  private def collected(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** A3: circulating supply for one block
     * (circulating-supply/src/main.rs:160-236).
     *
@@ -170,7 +179,8 @@ object Views {
     */
   def circulatingSupplyViaRpc(spark: SparkSession, block: DataFrame,
       lockupsView: DataFrame, transport: Rpc.Transport): DataFrame = {
-    val blockHeight = block.select(col("block_height").cast("long"))
+    val blockRow = collected(block)
+    val blockHeight = blockRow.select(col("block_height").cast("long"))
       .collect() match {
       case Array(row) => row.getLong(0)
       case rows => throw new IllegalStateException(
@@ -179,7 +189,7 @@ object Views {
     val states = Rpc.lockupStates(spark,
       lockupAccountIdsAtHeight(lockupsView, blockHeight), transport,
       blockHeight)
-    circulatingSupply(spark, block, lockupsView, states,
+    circulatingSupply(spark, blockRow, lockupsView, states,
       Rpc.foundationLockedTokens(transport, blockHeight))
   }
 
@@ -286,7 +296,7 @@ object Views {
       states: Dataset[Lockup.State], foundationLockedTokens: BigInt,
       requestTsNanos: BigInt): Option[DataFrame] = {
     val dayStart = startOfDayNs(requestTsNanos)
-    val block = latestBlockBeforeTimestamp(blocks, BigDecimal(dayStart))
+    val block = collected(latestBlockBeforeTimestamp(blocks, BigDecimal(dayStart)))
     block.select(col("block_timestamp").cast("long")).collect() match {
       case Array(row) =>
         val ts = BigInt(row.getLong(0))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 
 /** Deterministic single-file parquet mirrors for the DuckDB oracle's
-  * inputs (the near chain, the media images): Spark's part-file names
+  * inputs (the near chains, the lockup states): Spark's part-file names
   * embed a fresh write UUID, which would churn the git-tracked fixture
   * tree even though the bytes are deterministic. Rename the single
   * part file to `data.parquet` and drop the marker files so repeated

@@ -80,7 +80,7 @@ object NearQueries {
       s: SparkSession, dir: String): DataFrame =
     servedSort(scale2Tables(s)(name), order)
 
-  // Seed-13 chain through the STREAMING path, registries only: the
+  // Seed-13 chain through the STREAMING path, its registries gated: the
   // round-9 compaction bug needed BOTH wide key pools and a specific
   // cross-batch event placement (a key whose only events in some
   // microbatch are DELETEs) — placement is seed-dependent, so the
@@ -91,19 +91,7 @@ object NearQueries {
   private def streamed2Tables(s: SparkSession): Map[String, DataFrame] =
     streamed2Cache.get(s, (s2: SparkSession) => {
       scale2Tables(s2) // ensure the scale2_norm oracle fixture is written
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_stream2_gate_").toString
-      graft.near.ScaleChain.chain(seed = 13L).grouped(64).foreach { batch =>
-        graft.near.Stream.processBatch(s2,
-          graft.near.Ingest.blocksFromJson(s2, batch).toDF(), wh)
-      }
-      def t(name: String) =
-        graft.near.Warehouse.table(s2, wh, name).drop("block_date")
-      Map(
-        "accounts" -> graft.near.Warehouse.accountsCurrent(t("accounts")),
-        "access_keys" ->
-          graft.near.Warehouse.accessKeysCurrent(t("access_keys")),
-      ).map { case (n, df) => n -> df.persist() }
+      streamedWarehouse(s2, graft.near.ScaleChain.chain(seed = 13L))
     })
 
   // Fourth gate input: the SAME 256-block chain pushed through the
@@ -137,9 +125,9 @@ object NearQueries {
   /** Warehouse table name → `near_scale_streamed_<suffix>` entry
     * suffix. NearStreamSpec closes the loop: membership in
     * [[StreamedGateTables]] alone is NOT coverage — the spec also
-    * asserts each table's streamed entry exists in BOTH
-    * `SparkEntry.queries` and `SparkEntry.oracleSql`, so appending a
-    * name to the list without wiring the hash gate still fails.
+    * asserts each table's streamed entry exists in BOTH [[queries]]
+    * and [[NearOracles.sql]], so appending a name to the list without
+    * wiring the hash gate still fails.
     */
   val StreamedGateSuffix: Map[String, String] =
     StreamedGateTables.map(n => n -> (n match {
@@ -151,20 +139,30 @@ object NearQueries {
   private def streamedTables(s: SparkSession): Map[String, DataFrame] =
     streamedCache.get(s, (s2: SparkSession) => {
       scaleTables(s2) // ensure the scale_norm oracle fixture is written
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_stream_gate_").toString
-      graft.near.ScaleChain.chain().grouped(64).foreach { batch =>
-        graft.near.Stream.processBatch(s2,
-          graft.near.Ingest.blocksFromJson(s2, batch).toDF(), wh)
-      }
-      def t(name: String) =
-        graft.near.Warehouse.table(s2, wh, name).drop("block_date")
-      (StreamedPlainTables.map(n => n -> t(n)).toMap ++ Map(
-        "accounts" -> graft.near.Warehouse.accountsCurrent(t("accounts")),
-        "access_keys" ->
-          graft.near.Warehouse.accessKeysCurrent(t("access_keys")),
-      )).map { case (n, df) => n -> df.persist() }
+      streamedWarehouse(s2, graft.near.ScaleChain.chain())
     })
+
+  /** A chain pushed through the STREAMING path — `processBatch`
+    * microbatches of 64 blocks into a temp warehouse — and read back:
+    * the 15 plain tables verbatim, the two registries compacted from
+    * their appended deltas.
+    */
+  private[graft] def streamedWarehouse(s: SparkSession,
+      chain: Seq[String]): Map[String, DataFrame] = {
+    val wh = java.nio.file.Files
+      .createTempDirectory("graft_stream_gate_").toString
+    chain.grouped(64).foreach { batch =>
+      graft.near.Stream.processBatch(s,
+        graft.near.Ingest.blocksFromJson(s, batch).toDF(), wh)
+    }
+    def t(name: String) =
+      graft.near.Warehouse.table(s, wh, name).drop("block_date")
+    (StreamedPlainTables.map(n => n -> t(n)).toMap ++ Map(
+      "accounts" -> graft.near.Warehouse.accountsCurrent(t("accounts")),
+      "access_keys" ->
+        graft.near.Warehouse.accessKeysCurrent(t("access_keys")),
+    )).map { case (n, df) => n -> df.persist() }
+  }
 
   // Third gate input: the deterministic genesis document — the engine
   // runs the REAL streamed split (token-level JSON → JSONL →
@@ -186,21 +184,6 @@ object NearQueries {
       (acc.persist(), ak.persist())
     })
 
-  /** Drop this session's cached ETL outputs (hand fixture + scale
-    * chain). Long-lived sessions (the bench sweep) call this once the
-    * near section is done — the ~34 persisted tables otherwise add
-    * block-manager/GC pressure to every later query. Safe at any time:
-    * a later near query simply rebuilds the cache.
-    */
-  def releaseCaches(s: SparkSession): Unit = {
-    cache.remove(s).foreach(t => t.values.foreach(_.unpersist(false)))
-    scaleCache.remove(s).foreach(t => t.values.foreach(_.unpersist(false)))
-    streamedCache.remove(s).foreach(t => t.values.foreach(_.unpersist(false)))
-    genesisCache.remove(s).foreach { case (a, b) =>
-      a.unpersist(false); b.unpersist(false)
-    }
-  }
-
   /** Deterministic total order for a SERVED gate table, without the
     * range-partitioning sampling pass a global `orderBy` plans: these
     * entries serve FIXTURE-bounded cached tables (the 4-block hand
@@ -220,13 +203,91 @@ object NearQueries {
       s: SparkSession, dir: String): DataFrame =
     servedSort(tables(s)(name), order)
 
-  private def scaleTable(name: String, order: Seq[String])(
-      s: SparkSession, dir: String): DataFrame =
-    servedSort(scaleTables(s)(name), order)
+  private def served(name: String, order: String*)(
+      s: SparkSession, t: Map[String, DataFrame]): DataFrame =
+    servedSort(t(name), order)
 
-  private def streamedTable(name: String, order: Seq[String])(
-      s: SparkSession, dir: String): DataFrame =
-    servedSort(streamedTables(s)(name), order)
+  private val EventOrder = Seq("emitted_at_block_timestamp",
+    "emitted_in_shard_id", "emitted_index_of_event_entry_in_shard")
+
+  /** The `near_scale_<suffix>` entries over any ScaleChain's tables
+    * (`Ingest.allTables` output, or [[streamedWarehouse]] for the 17
+    * tables and the lockup view): the 17 tables, the J4/J5 lockup
+    * view, the daily supply series and the consumer queries at the
+    * generator's accounts. [[NearOracles.sql]] holds the twin of each
+    * under the same name, over `scale_norm`.
+    */
+  private[graft] val scaleViews
+      : Map[String, (SparkSession, Map[String, DataFrame]) => DataFrame] = Map(
+    "blocks" -> served("blocks", "block_height", "block_hash") _,
+    "chunks" -> served("chunks", "chunk_hash") _,
+    "transactions" -> served("transactions", "transaction_hash") _,
+    "transaction_actions" -> served("transaction_actions",
+      "transaction_hash", "index_in_transaction") _,
+    "receipts" -> served("receipts", "receipt_id") _,
+    "action_receipts" -> served("action_receipts", "receipt_id") _,
+    "action_receipt_input_data" -> served("action_receipt_input_data",
+      "input_data_id", "input_to_receipt_id") _,
+    "action_receipt_output_data" ->
+      served("action_receipt_output_data", "output_data_id") _,
+    "data_receipts" -> served("data_receipts", "data_id") _,
+    "execution_outcome_receipts" -> served("execution_outcome_receipts",
+      "executed_receipt_id", "index_in_execution_outcome") _,
+    "accounts" -> served("accounts", "account_id") _,
+    "access_keys" -> served("access_keys", "account_id", "public_key") _,
+    "nft_events" ->
+      served("assets__non_fungible_token_events", EventOrder: _*) _,
+    "action_receipt_actions" -> served("action_receipt_actions",
+      "receipt_id", "index_in_action_receipt") _,
+    "execution_outcomes" -> served("execution_outcomes", "receipt_id") _,
+    "account_changes" -> served("account_changes",
+      "changed_in_block_timestamp", "index_in_block") _,
+    "ft_events" -> served("assets__fungible_token_events", EventOrder: _*) _,
+    "lockups" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      servedSort(graft.near.Views.aggregatedLockups(t("accounts"),
+        t("receipts"), t("blocks")), Seq("account_id"))),
+    "q_tx_receipt_tree" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      graft.near.ConsumerQueries.transactionReceiptTree(
+        t("receipts"), t("execution_outcomes"), graft.near.ScaleChain.WhaleTx)),
+    "q_daily_gas" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      graft.near.ConsumerQueries.dailyGasStats(t("execution_outcomes"))),
+    "q_active_accounts" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      graft.near.ConsumerQueries.dailyActiveAccounts(t("transactions"))),
+    "q_method_calls" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      graft.near.ConsumerQueries.functionCallsByMethod(
+        t("action_receipt_actions"), "do_it")),
+    "q_ft_history" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      graft.near.ConsumerQueries.ftHistory(
+        t("assets__fungible_token_events"), "user1.near", "bob.near")),
+    "q_balance_history" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      graft.near.ConsumerQueries.accountBalanceHistory(
+        t("account_changes"), "user1.near")),
+    "q_nft_history" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      graft.near.ConsumerQueries.nftTokenHistory(
+        t("assets__non_fungible_token_events"), "user1.near", "tk1")),
+    // Keyset-pagination account-activity queries at volume: a full
+    // LIMIT page (100 rows) out of several hundred matching rows —
+    // mirrors transactions_signer_account_id_idx (up.sql:648-651) and
+    // receipts_receiver_account_id_idx (up.sql:606-609).
+    "q_tx_by_signer" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      graft.near.ConsumerQueries.transactionsBySigner(
+        t("transactions"), "user1.near")),
+    "q_receipts_by_receiver" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      graft.near.ConsumerQueries.receiptsByReceiver(t("receipts"), "user1.near")),
+    "q_daily_supply" -> ((s: SparkSession, t: Map[String, DataFrame]) =>
+      graft.near.Views.dailyCirculatingSupply(s, t("blocks"),
+        graft.near.Views.aggregatedLockups(t("accounts"), t("receipts"),
+          t("blocks")),
+        s.createDataset(graft.near.ScaleChain.lockupStates)(
+          org.apache.spark.sql.Encoders.product[graft.near.Lockup.State]),
+        Fixtures.foundationLocked)),
+  )
+
+  /** The `near_scale_streamed_<suffix>` entries: every table the
+    * streaming path writes, plus the lockup view over them.
+    */
+  private[graft] val StreamedViews: Seq[String] =
+    StreamedGateSuffix.values.toSeq.sorted :+ "lockups"
 
   /** Hash-stable final projection: the driver's compare canonicalizes
     * cells via pandas `astype(str)`, which floats DuckDB DECIMALs
@@ -234,7 +295,7 @@ object NearQueries {
     * and BINARY → lowercase hex on BOTH sides ([[NearOracles.stable]]
     * is the twin) so the hash sees identical representations.
     */
-  private def hashStable(df: DataFrame): DataFrame = {
+  private[graft] def hashStable(df: DataFrame): DataFrame = {
     val cols = df.schema.fields.toSeq.map { f =>
       f.dataType match {
         case _: DecimalType => col(f.name).cast("string").as(f.name)
@@ -320,80 +381,6 @@ object NearQueries {
         s.createDataset(Fixtures.lockupStates),
         Fixtures.foundationLocked)
     }),
-    // --- volume gate over the 256-block ScaleChain ---
-    "near_scale_blocks" ->
-      scaleTable("blocks", Seq("block_height", "block_hash")) _,
-    "near_scale_chunks" -> scaleTable("chunks", Seq("chunk_hash")) _,
-    "near_scale_transactions" ->
-      scaleTable("transactions", Seq("transaction_hash")) _,
-    "near_scale_transaction_actions" ->
-      scaleTable("transaction_actions",
-        Seq("transaction_hash", "index_in_transaction")) _,
-    "near_scale_receipts" -> scaleTable("receipts", Seq("receipt_id")) _,
-    "near_scale_action_receipts" ->
-      scaleTable("action_receipts", Seq("receipt_id")) _,
-    "near_scale_action_receipt_input_data" ->
-      scaleTable("action_receipt_input_data",
-        Seq("input_data_id", "input_to_receipt_id")) _,
-    "near_scale_action_receipt_output_data" ->
-      scaleTable("action_receipt_output_data", Seq("output_data_id")) _,
-    "near_scale_data_receipts" -> scaleTable("data_receipts", Seq("data_id")) _,
-    "near_scale_execution_outcome_receipts" ->
-      scaleTable("execution_outcome_receipts",
-        Seq("executed_receipt_id", "index_in_execution_outcome")) _,
-    "near_scale_accounts" -> scaleTable("accounts", Seq("account_id")) _,
-    "near_scale_access_keys" ->
-      scaleTable("access_keys", Seq("account_id", "public_key")) _,
-    "near_scale_nft_events" ->
-      scaleTable("assets__non_fungible_token_events",
-        Seq("emitted_at_block_timestamp", "emitted_in_shard_id",
-          "emitted_index_of_event_entry_in_shard")) _,
-    "near_scale_action_receipt_actions" ->
-      scaleTable("action_receipt_actions",
-        Seq("receipt_id", "index_in_action_receipt")) _,
-    "near_scale_execution_outcomes" ->
-      scaleTable("execution_outcomes", Seq("receipt_id")) _,
-    "near_scale_account_changes" ->
-      scaleTable("account_changes",
-        Seq("changed_in_block_timestamp", "index_in_block")) _,
-    "near_scale_ft_events" ->
-      scaleTable("assets__fungible_token_events",
-        Seq("emitted_at_block_timestamp", "emitted_in_shard_id",
-          "emitted_index_of_event_entry_in_shard")) _,
-    "near_scale_q_tx_receipt_tree" -> ((s: SparkSession, dir: String) =>
-      graft.near.ConsumerQueries.transactionReceiptTree(
-        scaleTables(s)("receipts"), scaleTables(s)("execution_outcomes"),
-        graft.near.ScaleChain.WhaleTx)),
-    "near_scale_q_daily_gas" -> ((s: SparkSession, dir: String) =>
-      graft.near.ConsumerQueries.dailyGasStats(
-        scaleTables(s)("execution_outcomes"))),
-    "near_scale_q_active_accounts" -> ((s: SparkSession, dir: String) =>
-      graft.near.ConsumerQueries.dailyActiveAccounts(
-        scaleTables(s)("transactions"))),
-    "near_scale_q_method_calls" -> ((s: SparkSession, dir: String) =>
-      graft.near.ConsumerQueries.functionCallsByMethod(
-        scaleTables(s)("action_receipt_actions"), "do_it")),
-    "near_scale_q_ft_history" -> ((s: SparkSession, dir: String) =>
-      graft.near.ConsumerQueries.ftHistory(
-        scaleTables(s)("assets__fungible_token_events"),
-        "user1.near", "bob.near")),
-    "near_scale_q_balance_history" -> ((s: SparkSession, dir: String) =>
-      graft.near.ConsumerQueries.accountBalanceHistory(
-        scaleTables(s)("account_changes"), "user1.near")),
-    "near_scale_q_nft_history" -> ((s: SparkSession, dir: String) =>
-      graft.near.ConsumerQueries.nftTokenHistory(
-        scaleTables(s)("assets__non_fungible_token_events"),
-        "user1.near", "tk1")),
-    // Keyset-pagination account-activity queries at volume: a full
-    // LIMIT page (100 rows) out of several hundred matching rows —
-    // mirrors transactions_signer_account_id_idx (up.sql:648-651) and
-    // receipts_receiver_account_id_idx (up.sql:606-609).
-    "near_scale_q_tx_by_signer" -> ((s: SparkSession, dir: String) =>
-      graft.near.ConsumerQueries.transactionsBySigner(
-        scaleTables(s)("transactions"), "user1.near")),
-    "near_scale_q_receipts_by_receiver" -> ((s: SparkSession, dir: String) =>
-      graft.near.ConsumerQueries.receiptsByReceiver(
-        scaleTables(s)("receipts"), "user1.near")),
     // --- second-seed volume gate (seed 13): the trickiest tables ---
     "near_scale2_transactions" ->
       scale2Table("transactions", Seq("transaction_hash")) _,
@@ -414,70 +401,6 @@ object NearQueries {
     "near_scale2_streamed_access_keys" -> ((s: SparkSession, dir: String) =>
       servedSort(streamed2Tables(s)("access_keys"),
         Seq("account_id", "public_key"))),
-    // --- streamed-warehouse convergence at volume: ALL 17 tables ---
-    // Every warehouse table the streaming path writes is read back and
-    // hash-checked against its batch twin — cross-batch lineage, the
-    // delegate flatten when a delegate's receipt lands in a later
-    // microbatch than its tx (receipts.rs:534-625), shard ordinals
-    // under batch splits (2022-01-12-100000_assets_ft/up.sql:15-21),
-    // outcome→receipt edges, binary payloads across commit boundaries,
-    // and the registry delta compactions.
-    "near_scale_streamed_blocks" ->
-      streamedTable("blocks", Seq("block_height", "block_hash")) _,
-    "near_scale_streamed_chunks" -> streamedTable("chunks", Seq("chunk_hash")) _,
-    "near_scale_streamed_receipts" ->
-      streamedTable("receipts", Seq("receipt_id")) _,
-    "near_scale_streamed_transactions" ->
-      streamedTable("transactions", Seq("transaction_hash")) _,
-    "near_scale_streamed_transaction_actions" ->
-      streamedTable("transaction_actions",
-        Seq("transaction_hash", "index_in_transaction")) _,
-    "near_scale_streamed_action_receipts" ->
-      streamedTable("action_receipts", Seq("receipt_id")) _,
-    "near_scale_streamed_action_receipt_input_data" ->
-      streamedTable("action_receipt_input_data",
-        Seq("input_data_id", "input_to_receipt_id")) _,
-    "near_scale_streamed_action_receipt_output_data" ->
-      streamedTable("action_receipt_output_data", Seq("output_data_id")) _,
-    "near_scale_streamed_execution_outcomes" ->
-      streamedTable("execution_outcomes", Seq("receipt_id")) _,
-    "near_scale_streamed_ft_events" ->
-      streamedTable("assets__fungible_token_events",
-        Seq("emitted_at_block_timestamp", "emitted_in_shard_id",
-          "emitted_index_of_event_entry_in_shard")) _,
-    "near_scale_streamed_accounts" ->
-      streamedTable("accounts", Seq("account_id")) _,
-    "near_scale_streamed_access_keys" ->
-      streamedTable("access_keys", Seq("account_id", "public_key")) _,
-    "near_scale_streamed_action_receipt_actions" ->
-      streamedTable("action_receipt_actions",
-        Seq("receipt_id", "index_in_action_receipt")) _,
-    "near_scale_streamed_execution_outcome_receipts" ->
-      streamedTable("execution_outcome_receipts",
-        Seq("executed_receipt_id", "index_in_execution_outcome")) _,
-    "near_scale_streamed_account_changes" ->
-      streamedTable("account_changes",
-        Seq("changed_in_block_timestamp", "index_in_block")) _,
-    "near_scale_streamed_nft_events" ->
-      streamedTable("assets__non_fungible_token_events",
-        Seq("emitted_at_block_timestamp", "emitted_in_shard_id",
-          "emitted_index_of_event_entry_in_shard")) _,
-    "near_scale_streamed_data_receipts" ->
-      streamedTable("data_receipts", Seq("data_id")) _,
-    // The J4/J5 view computed over the STREAMED warehouse (compacted
-    // registries + streamed receipts/blocks) must equal the view over
-    // the batch tables — the consumer-facing check that the streaming
-    // path's registry deltas compose correctly under downstream joins.
-    "near_scale_streamed_lockups" -> ((s: SparkSession, dir: String) => {
-      val t = streamedTables(s)
-      servedSort(graft.near.Views.aggregatedLockups(t("accounts"),
-        t("receipts"), t("blocks")), Seq("account_id"))
-    }),
-    "near_scale_lockups" -> ((s: SparkSession, dir: String) => {
-      val t = scaleTables(s)
-      servedSort(graft.near.Views.aggregatedLockups(t("accounts"),
-        t("receipts"), t("blocks")), Seq("account_id"))
-    }),
     // J7 backfill: strip the denormalized columns and reconstruct them
     // with the backfill join — must hash-equal the live table's twin.
     "near_backfill_ara_denorm" -> ((s: SparkSession, dir: String) => {
@@ -490,26 +413,26 @@ object NearQueries {
       servedSort(genesisTables(s)._1, Seq("account_id"))),
     "near_genesis_access_keys" -> ((s: SparkSession, dir: String) =>
       servedSort(genesisTables(s)._2, Seq("account_id", "public_key"))),
-    "near_scale_q_daily_supply" -> ((s: SparkSession, dir: String) => {
-      import s.implicits._
-      val t = scaleTables(s)
-      graft.near.Views.dailyCirculatingSupply(s, t("blocks"),
-        graft.near.Views.aggregatedLockups(t("accounts"), t("receipts"),
-          t("blocks")),
-        s.createDataset(graft.near.ScaleChain.lockupStates),
-        Fixtures.foundationLocked)
-    }),
-  )
+  ) ++ scaleViews.map { case (sfx, f) =>
+    // --- volume gate over the 256-block ScaleChain ---
+    s"near_scale_$sfx" -> ((s: SparkSession, dir: String) => f(s, scaleTables(s)))
+  } ++ StreamedViews.map { sfx =>
+    // --- streamed-warehouse convergence at volume: ALL 17 tables ---
+    // Every warehouse table the streaming path writes is read back and
+    // hash-checked against its batch twin — cross-batch lineage, the
+    // delegate flatten when a delegate's receipt lands in a later
+    // microbatch than its tx (receipts.rs:534-625), shard ordinals
+    // under batch splits (2022-01-12-100000_assets_ft/up.sql:15-21),
+    // outcome→receipt edges, binary payloads across commit boundaries,
+    // and the registry delta compactions. The J4/J5 lockup view over
+    // the streamed warehouse checks that the registry deltas compose
+    // under downstream joins.
+    s"near_scale_streamed_$sfx" -> ((s: SparkSession, dir: String) =>
+      scaleViews(sfx)(s, streamedTables(s)))
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     raw.map { case (name, f) =>
       name -> ((s: SparkSession, dir: String) => hashStable(f(s, dir)))
     }
-
-  /** Largest live ETL-cache entry count (post-sweep) — see
-    * [[graft.functions.Multimodal.fixtureCacheSize]].
-    */
-  private[graft] def etlCacheSize: Int =
-    Seq(cache, scaleCache, scale2Cache, streamed2Cache, streamedCache,
-      genesisCache).map(_.size).max
 }

@@ -2,14 +2,12 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Deterministic listener-bus drain for the measurement tooling
-  * (Bench's jobs-vs-wall split, JobProfile's per-job table):
-  * `SparkContext.listenerBus.waitUntilEmpty` is `private[spark]`, so
-  * this one-method bridge lives under `org.apache.spark`. It replaces
-  * the previous `Thread.sleep(300)` drain, which was a race — under
-  * load late JobEnd/StageCompleted events landed after the profile was
-  * printed and skewed per-job metrics (r20 ADVICE). Measurement
-  * plumbing only; no query path touches this.
+/** Deterministic listener-bus drain for job-counting listeners (the
+  * test suites' Spark-job guards): `SparkContext.listenerBus.waitUntilEmpty`
+  * is `private[spark]`, so this one-method bridge lives under
+  * `org.apache.spark`. A fixed sleep instead would race: under load,
+  * late JobStart/JobEnd events land after the count is read.
+  * Measurement plumbing only; no query path touches this.
   */
 object ListenerSync {
   /** Block until every queued listener event has been delivered, or

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.near.{BlockParser, Fixtures, Ingest}
+import graft.queries.{NearOracles, NearQueries}
 
 /** Golden tests for the NEAR ETL DAG over the fixture chain
   * (FIXTURES.md §A): every quirk gets a concrete expected value.
@@ -14,6 +15,34 @@ class NearSpec extends AnyFunSuite {
   lazy val tables: Map[String, DataFrame] =
     Ingest.allTables(Ingest.blocksFromJson(spark, Fixtures.chain).toDF())
       .map { case (k, v) => k -> v.cache() }
+
+  // The near_* entries read the embedded fixture chains; their data
+  // directory argument is unused.
+  private def query(name: String): DataFrame =
+    NearQueries.queries(name)(spark, "")
+
+  test("registry completeness: queries and oracleSql keysets match") {
+    // A declared entry silently absent from the correctness dump must be
+    // impossible: every query needs an oracle (the DuckDB compare) and
+    // every oracle needs a query (a dangling oracle is dead SQL).
+    val q = NearQueries.queries.keySet
+    val o = NearOracles.sql.keySet
+    assert((q -- o).isEmpty, s"queries without oracle: ${(q -- o).toSeq.sorted}")
+    assert((o -- q).isEmpty, s"oracles without query: ${(o -- q).toSeq.sorted}")
+  }
+
+  test("every query with an oracle has matching column names (sorted)") {
+    // The oracle compare sorts columns by name before comparing; catch
+    // drift early by asserting the oracle SQL mentions each Spark
+    // output column.
+    NearOracles.sql.foreach { case (name, sql) =>
+      val cols = query(name).columns
+      cols.foreach { c =>
+        assert(sql.toLowerCase.contains(c.toLowerCase),
+          s"$name: column $c not present in oracle SQL")
+      }
+    }
+  }
 
   test("blocks: fork keeps both same-height blocks") {
     val rows = tables("blocks").collect()
@@ -214,8 +243,8 @@ class NearSpec extends AnyFunSuite {
   }
 
   test("all near gate queries return rows") {
-    graft.queries.NearQueries.queries.foreach { case (name, fn) =>
-      assert(fn(spark, sf).count() > 0, s"$name returned no rows")
+    NearQueries.queries.keys.foreach { name =>
+      assert(query(name).count() > 0, s"$name returned no rows")
     }
   }
 

@@ -251,9 +251,9 @@ class NearStreamSpec extends AnyFunSuite {
     graft.queries.NearQueries.StreamedGateSuffix.foreach {
       case (table, suffix) =>
         val entry = s"near_scale_streamed_$suffix"
-        assert(SparkEntry.queries.contains(entry),
-          s"$table: no $entry in SparkEntry.queries")
-        assert(SparkEntry.oracleSql.contains(entry),
+        assert(graft.queries.NearQueries.queries.contains(entry),
+          s"$table: no $entry in NearQueries.queries")
+        assert(graft.queries.NearOracles.sql.contains(entry),
           s"$table: no $entry oracle — the twin is never hash-checked")
     }
 

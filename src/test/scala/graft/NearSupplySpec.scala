@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
-import graft.near.{Fixtures, Ingest, Lockup, ScaleChain, Views}
+import graft.near.{Fixtures, Ingest, Lockup, Rpc, ScaleChain, Views}
 
 /** Golden tests for the lockup math (lockup.rs:104-196), the
   * aggregated__lockups view (J4/J5), the block lookups (A1/A2), and
@@ -264,6 +264,40 @@ class NearSupplySpec extends AnyFunSuite {
     }
     assert(jobs <= 8, s"$jobs Spark jobs")
   }
+
+  test("the daily supply job and the RPC supply scan blocks once per call") {
+    // Both read the A2 block twice (its timestamp or height, then its
+    // fields); a lazy lookup re-ran the top-1 sort over `blocks` per
+    // read: 2 scans and 5 Spark jobs per call.
+    val t = scaleTables(1L)
+    val n = t("blocks").count()
+    val read = spark.sparkContext.longAccumulator("blocks rows read")
+    val counted = udf((_: String) => { read.add(1L); true }).asNondeterministic()
+    val blocks = t("blocks").filter(counted(col("block_hash")))
+    val v = newView(t)
+    val lastTs = BigInt(t("blocks").agg(max(col("block_timestamp")))
+      .head().getDecimal(0).toBigInteger)
+    def scansAndJobs(body: => Unit): (Double, Int) = {
+      read.reset()
+      val jobs = countJobs(spark)(body)
+      (read.value.toDouble / n, jobs)
+    }
+    val (dailyScans, dailyJobs) = scansAndJobs {
+      val day = Views.computeDailyIfMissing(spark, blocks, v, None, states,
+        Fixtures.foundationLocked, lastTs)
+      assert(day.get.collect().length == 1)
+    }
+    assert(dailyScans == 1.0, s"daily job: blocks scanned $dailyScans times")
+    assert(dailyJobs <= 4, s"daily job: $dailyJobs Spark jobs")
+    val (rpcScans, rpcJobs) = scansAndJobs {
+      val block = Views.latestBlockBeforeTimestamp(blocks, BigDecimal(lastTs))
+      val row = Views.circulatingSupplyViaRpc(spark, block, v,
+        new ScaleTransport).collect()
+      assert(row.length == 1 && row(0).getAs[Int]("total_lockup_contracts_count") > 0)
+    }
+    assert(rpcScans == 1.0, s"RPC supply: blocks scanned $rpcScans times")
+    assert(rpcJobs <= 4, s"RPC supply: $rpcJobs Spark jobs")
+  }
 }
 
 object NearSupplySpec {
@@ -289,6 +323,28 @@ object NearSupplySpec {
       sc.removeSparkListener(listener)
     }
     n.get()
+  }
+
+  /** RPC point source over ScaleChain's lockup states; foundation
+    * accounts hold nothing.
+    */
+  final class ScaleTransport extends Rpc.Transport {
+    @transient private lazy val mapper =
+      new com.fasterxml.jackson.databind.ObjectMapper()
+    def post(body: String): String = {
+      val params = mapper.readTree(body).get("params")
+      val state = ScaleChain.lockupStates
+        .find(_.accountId == params.get("account_id").asText())
+      params.get("request_type").asText() match {
+        case "view_state" =>
+          val v = java.util.Base64.getEncoder.encodeToString(
+            NearRpcFixtures.encodeContract(state.get))
+          s"""{"result":{"values":[{"key":"U1RBVEU=","value":"$v"}]}}"""
+        case "view_account" =>
+          val hash = state.fold("11111111111111111111111111111111")(_.codeHash)
+          s"""{"result":{"amount":"0","locked":"0","code_hash":"$hash","storage_usage":1000}}"""
+      }
+    }
   }
 
   /** The lockup view and daily series as four broadcast semi-joins and
